@@ -11,8 +11,6 @@ Imported by driver_queries for registration side effects.
 
 from __future__ import annotations
 
-import atexit
-
 from pyspark.sql import functions as F
 
 from .driver_queries import (
@@ -21,8 +19,8 @@ from .driver_queries import (
     dtw_pairs_distances,
     register,
     r6,
-    session_cached,
 )
+from .fixtures import fixture
 from .operators import cleaning, dedup, relational, text, vectors
 from .sources.readers import ORACLE_BARS_CTE, load_table
 
@@ -230,19 +228,11 @@ sh AS (
 
 _SHINGLE_DF_CAP = 100
 
-# Documents-table row count per sf_dir — the size driver for the
-# landed-cache spread floor below. One metadata-only parquet count per
-# corpus; the value is engine- and session-independent, so a plain
-# dict memo is safe across sessions.
-_DOC_COUNT_CACHE: dict[str, int] = {}
-
-
+# Documents-table row count — the size driver for the landed-cache
+# spread floor below (one metadata-only parquet count per session).
+@fixture("value")
 def _doc_count(spark, sf_dir: str) -> int:
-    n = _DOC_COUNT_CACHE.get(sf_dir)
-    if n is None:
-        n = load_table(spark, sf_dir, "documents").count()
-        _DOC_COUNT_CACHE[sf_dir] = n
-    return n
+    return load_table(spark, sf_dir, "documents").count()
 
 
 def _spread_n(spark, sf_dir: str, per_task_docs: int = 8) -> int:
@@ -261,101 +251,55 @@ def _spread_n(spark, sf_dir: str, per_task_docs: int = 8) -> int:
 
 
 # The (doc_id, 3-shingle) inverted-index base feeds dedup_ngram_jaccard
-# AND dedup_minhash_lsh (signatures + verification) — the corpus is
-# shingled once per (session, sf_dir). At cluster scale this is the
-# written `ngram_write_index` table computed at ingest.
-_SHINGLES_CACHE: dict = {}
-
-
+# AND dedup_minhash_lsh (signatures + verification). At cluster scale
+# this is the written `ngram_write_index` table computed at ingest.
+@fixture("blocks")
 def _shingles(spark, sf_dir):
     # repartition before the checkpoint: AQE coalesces the shingle
     # table to ~2 partitions by BYTES, single-tasking the md5/banding
     # maps every consumer runs on it (r12 optimization round — the
     # landed-cache spread pattern, see _deduped_links_pages)
-    return session_cached(
-        _SHINGLES_CACHE,
-        spark,
-        sf_dir,
-        lambda: dedup.doc_shingles(
-            load_table(spark, sf_dir, "documents"), k=3
-        ).repartition(_spread_n(spark, sf_dir)),
-    )
+    return dedup.doc_shingles(
+        load_table(spark, sf_dir, "documents"), k=3
+    ).repartition(_spread_n(spark, sf_dir))
 
 
-# The verified near-dup pair table feeds BOTH dedup_ngram_jaccard and
-# neardup_clusters (same candidate policy, same threshold). Like the
-# bars model, materialize it once per (session, sf_dir) — a pipeline
-# would land it as a table; recomputing the inverted-index join twice
-# per session is pure waste. Dead-context entries evicted on access
-# (see driver_queries.session_cached).
-_NGRAM_PAIRS_CACHE: dict = {}
-
-
+# The verified near-dup pair table (same candidate policy, same
+# threshold as dedup_ngram_jaccard) is the INPUT of neardup_clusters,
+# canonical_selection and triplet_mining — a pipeline would land it as
+# a table.
+@fixture("blocks")
 def _ngram_pairs(spark, sf_dir):
-    return session_cached(
-        _NGRAM_PAIRS_CACHE,
-        spark,
-        sf_dir,
-        lambda: dedup.ngram_jaccard_pairs(
-            load_table(spark, sf_dir, "documents"),
-            k=3,
-            threshold=0.2,
-            max_shingle_df=_SHINGLE_DF_CAP,
-            shingles=_shingles(spark, sf_dir),
-        ),
-    )
+    return q_ngram_jaccard(spark, sf_dir)
 
 
-# One multi-table LSH signature table per (session, sf_dir), shared by
+# One multi-table LSH signature table, shared by
 # embedding_neardup_pairs and ann_lsh_topk (identical md5 plane family)
 # — at cluster scale this is a written index computed at ingest. Only
 # the narrow (vec_id, tbl, sig) rows are materialized; consumers join
 # vectors from the columnar source.
-_LSH_SIGS_CACHE: dict = {}
-
-
+@fixture("blocks")
 def _lsh_sigs(spark, sf_dir):
-    return session_cached(
-        _LSH_SIGS_CACHE,
-        spark,
-        sf_dir,
-        lambda: vectors.lsh_signatures(
-            load_table(spark, sf_dir, "embeddings")
-        ),
-    )
+    return vectors.lsh_signatures(load_table(spark, sf_dir, "embeddings"))
 
 
-# One quantized corpus + one trained coarse quantizer per (session,
-# sf_dir), shared by ann_ivf_topk and kmeans_clusters — the same
-# ingest-time artifact both would read on a cluster (the IVF index is
-# literally this k-means).
-_IVF_FLAT_CACHE: dict = {}
-_IVF_CENTS_CACHE: dict = {}
-
-
+# One quantized corpus + one trained coarse quantizer, shared by
+# ann_ivf_topk and kmeans_clusters — the same ingest-time artifact both
+# would read on a cluster (the IVF index is literally this k-means).
+@fixture("blocks")
 def _ivf_flat(spark, sf_dir):
-    return session_cached(
-        _IVF_FLAT_CACHE,
-        spark,
-        sf_dir,
-        lambda: vectors._quantized_flat(
-            vectors.with_dvec(load_table(spark, sf_dir, "embeddings")),
-            "vec_id",
-        ),
+    return vectors._quantized_flat(
+        vectors.with_dvec(load_table(spark, sf_dir, "embeddings")), "vec_id"
     )
 
 
+@fixture("blocks")
 def _ivf_cents(spark, sf_dir):
-    return session_cached(
-        _IVF_CENTS_CACHE,
-        spark,
-        sf_dir,
-        lambda: vectors.ivf_train(
-            load_table(spark, sf_dir, "embeddings"),
-            n_centroids=16,
-            iters=1,
-            flat=_ivf_flat(spark, sf_dir),
-        ),
+    return vectors.ivf_train(
+        load_table(spark, sf_dir, "embeddings"),
+        n_centroids=16,
+        iters=1,
+        flat=_ivf_flat(spark, sf_dir),
     )
 
 
@@ -392,7 +336,13 @@ def _ivf_cents(spark, sf_dir):
     "(viral shingles dropped from the self-join), full-set verification (M8)",
 )
 def q_ngram_jaccard(spark, sf_dir):
-    return _ngram_pairs(spark, sf_dir)
+    return dedup.ngram_jaccard_pairs(
+        load_table(spark, sf_dir, "documents"),
+        k=3,
+        threshold=0.2,
+        max_shingle_df=_SHINGLE_DF_CAP,
+        shingles=_shingles(spark, sf_dir),
+    )
 
 
 _MH_ROWS_PER_BAND = dedup.MINHASH_HASHES // dedup.MINHASH_BANDS
@@ -556,74 +506,22 @@ def q_streaming_neardup(spark, sf_dir):
 
 
 # Staging for the streaming near-dup query is an INGEST artifact (the
-# base-corpus LSH index + the two increment files), not operator work —
-# built once per (session, sf_dir) like the bars/shingle caches, so
-# each run times the stream itself: per-batch incremental LSH +
-# idempotent index appends + pair writes. Unlike session_cached (whose
-# payloads die with the JVM), these entries own DISK trees — eviction
-# below and the atexit hook rmtree them.
-# Shared lifecycle for every staged-ingest disk tree in this module:
-# one cached workdir per (applicationId, sf_dir), dead-context entries
-# evicted (tree removed) on access, every tree removed at interpreter
-# exit. Unlike `session_cached` (whose payloads die with the JVM),
-# these entries own DISK trees — hence the explicit rmtree lifecycle.
-_WORKDIR_CACHES: list[dict] = []
-
-
-def _workdirs_cleanup() -> None:
-    import shutil
-
-    for cache in _WORKDIR_CACHES:
-        for _, w in cache.values():
-            shutil.rmtree(w, ignore_errors=True)
-        cache.clear()
-
-
-atexit.register(_workdirs_cleanup)
-
-
-def _session_workdir(cache: dict, spark, sf_dir: str, prefix: str, populate) -> str:
-    """Return `cache`'s workdir for this (session, sf_dir), building it
-    with `populate(work)` exactly once per session."""
-    import shutil
-    import tempfile
-
-    if not any(c is cache for c in _WORKDIR_CACHES):
-        _WORKDIR_CACHES.append(cache)
-    for k in [k for k, (ctx, _) in cache.items() if ctx._jsc is None]:
-        shutil.rmtree(cache.pop(k)[1], ignore_errors=True)
-    sc = spark.sparkContext
-    key = (sc.applicationId, sf_dir)
-    if key not in cache:
-        work = tempfile.mkdtemp(prefix=prefix)
-        try:
-            populate(work)
-        except BaseException:
-            shutil.rmtree(work, ignore_errors=True)
-            raise
-        cache[key] = (sc, work)
-    return cache[key][1]
-
-
-_STREAM_NEARDUP_SETUP: dict = {}
-
-
-def _stream_neardup_setup(spark, sf_dir: str) -> str:
-    def populate(work: str) -> None:
-        docs = load_table(spark, sf_dir, "documents")
-        base = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 0)
-        dedup.minhash_write_index(base, f"{work}/index", k_shingle=3)
-        # two deterministic increments, one parquet file each → one
-        # micro-batch each under maxFilesPerTrigger=1 (the union result
-        # is batching-invariant, so file/batch order needn't be pinned)
-        for i in (1, 2):
-            docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i).coalesce(
-                1
-            ).write.mode("overwrite").parquet(f"{work}/stage/b{i}")
-
-    return _session_workdir(
-        _STREAM_NEARDUP_SETUP, spark, sf_dir, "streaming_neardup_", populate
-    )
+# base-corpus LSH index + the two increment files), not operator work,
+# so each run times the stream itself: per-batch incremental LSH +
+# idempotent index appends + pair writes.
+@fixture("dir")
+def _stream_neardup_setup(spark, sf_dir: str, work: str) -> str:
+    docs = load_table(spark, sf_dir, "documents")
+    base = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 0)
+    dedup.minhash_write_index(base, f"{work}/index", k_shingle=3)
+    # two deterministic increments, one parquet file each → one
+    # micro-batch each under maxFilesPerTrigger=1 (the union result
+    # is batching-invariant, so file/batch order needn't be pinned)
+    for i in (1, 2):
+        docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i).coalesce(
+            1
+        ).write.mode("overwrite").parquet(f"{work}/stage/b{i}")
+    return work
 
 
 @register(
@@ -1435,36 +1333,23 @@ def q_ann_ivf(spark, sf_dir):
     )
 
 
-# One PQ codebook set + one encoded-codes table per (session, sf_dir) —
-# like the IVF artifacts these are ingest products (the codes table IS
-# the compressed standing index queries scan), shared so repeated
-# queries pay only the ADC scan.
-_PQ_CENTS_CACHE: dict = {}
-_PQ_CODES_CACHE: dict = {}
-
-
+# One PQ codebook set + one encoded-codes table — like the IVF
+# artifacts these are ingest products (the codes table IS the
+# compressed standing index queries scan), shared so repeated queries
+# pay only the ADC scan.
+@fixture("blocks")
 def _pq_cents(spark, sf_dir):
-    return session_cached(
-        _PQ_CENTS_CACHE,
-        spark,
-        sf_dir,
-        lambda: vectors.pq_train(
-            load_table(spark, sf_dir, "embeddings"),
-            flat=_ivf_flat(spark, sf_dir),
-        ),
+    return vectors.pq_train(
+        load_table(spark, sf_dir, "embeddings"), flat=_ivf_flat(spark, sf_dir)
     )
 
 
+@fixture("blocks")
 def _pq_codes(spark, sf_dir):
-    return session_cached(
-        _PQ_CODES_CACHE,
-        spark,
-        sf_dir,
-        lambda: vectors.pq_encode(
-            load_table(spark, sf_dir, "embeddings"),
-            _pq_cents(spark, sf_dir),
-            flat=_ivf_flat(spark, sf_dir),
-        ),
+    return vectors.pq_encode(
+        load_table(spark, sf_dir, "embeddings"),
+        _pq_cents(spark, sf_dir),
+        flat=_ivf_flat(spark, sf_dir),
     )
 
 
@@ -1684,47 +1569,39 @@ def q_audio_features(spark, sf_dir):
 # Landed codec-tier fixtures (r13): the PNG/JPEG/WAV SYNTHESIZERS are
 # test scaffolding (the fixture twin of a crawled binary drop — a real
 # pipeline reads the bytes from storage), so each corpus lands once
-# per (session, sf_dir) like the charset-WARC files table. The codec
-# under test — stdlib/numpy DECODE, dHash, banding — still runs
-# inside every query invocation (the warc_extraction precedent:
-# fixture cached, parse in-query). Spread before the checkpoint: the
-# consumers are Python-heavy per row and the corpora coalesce to one
-# partition by bytes.
-_WAV_CORPUS_CACHE: dict = {}
-_PNG_CORPUS_CACHE: dict = {}
-_JPEG_CORPUS_CACHE: dict = {}
+# per session like the charset-WARC files table. The codec under
+# test — stdlib/numpy DECODE, dHash, banding — still runs inside every
+# query invocation (the warc_extraction precedent: fixture cached,
+# parse in-query). Spread before the checkpoint: the consumers are
+# Python-heavy per row and the corpora coalesce to one partition by
+# bytes.
+def _doc_ids_spread(spark, sf_dir, synth):
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    return synth(docs).repartition(_spread_n(spark, sf_dir))
 
 
-def _landed_fixture(cache, spark, sf_dir, synth):
-    def build():
-        docs = load_table(spark, sf_dir, "documents").select("doc_id")
-        return synth(docs).repartition(_spread_n(spark, sf_dir))
-    return session_cached(cache, spark, sf_dir, build)
-
-
+@fixture("blocks")
 def _wav_corpus(spark, sf_dir):
     from .operators import multimodal
 
-    return _landed_fixture(
-        _WAV_CORPUS_CACHE, spark, sf_dir, multimodal.synthesize_wav_corpus
-    )
+    return _doc_ids_spread(spark, sf_dir, multimodal.synthesize_wav_corpus)
 
 
+@fixture("blocks")
 def _png_corpus(spark, sf_dir):
     from .operators import multimodal
 
-    return _landed_fixture(
-        _PNG_CORPUS_CACHE, spark, sf_dir,
-        lambda d: multimodal.synthesize_png_corpus(d, cluster=5),
+    return _doc_ids_spread(
+        spark, sf_dir, lambda d: multimodal.synthesize_png_corpus(d, cluster=5)
     )
 
 
+@fixture("blocks")
 def _jpeg_corpus(spark, sf_dir):
     from .operators import multimodal
 
-    return _landed_fixture(
-        _JPEG_CORPUS_CACHE, spark, sf_dir,
-        lambda d: multimodal.synthesize_jpeg_corpus(d, cluster=5),
+    return _doc_ids_spread(
+        spark, sf_dir, lambda d: multimodal.synthesize_jpeg_corpus(d, cluster=5)
     )
 
 
@@ -1775,21 +1652,16 @@ def q_trailing_revenue(spark, sf_dir):
 
 
 # Staged 2-file orders corpus for the incremental-MV query — an INGEST
-# artifact (one split per session/sf_dir), so each query invocation
-# times the incremental maintenance itself. Disk trees owned like
-# _STREAM_NEARDUP_SETUP (atexit + dead-context eviction).
-_MV_SETUP: dict = {}
-
-
-def _mv_setup(spark, sf_dir: str) -> str:
-    def populate(work: str) -> None:
-        orders = load_table(spark, sf_dir, "orders")
-        for i in (0, 1):
-            orders.filter(F.pmod(F.col("o_orderkey"), F.lit(2)) == i).coalesce(
-                1
-            ).write.mode("overwrite").parquet(f"{work}/stage/b{i}")
-
-    return _session_workdir(_MV_SETUP, spark, sf_dir, "agg_mv_", populate)
+# artifact, so each query invocation times the incremental maintenance
+# itself.
+@fixture("dir")
+def _mv_setup(spark, sf_dir: str, work: str) -> str:
+    orders = load_table(spark, sf_dir, "orders")
+    for i in (0, 1):
+        orders.filter(F.pmod(F.col("o_orderkey"), F.lit(2)) == i).coalesce(
+            1
+        ).write.mode("overwrite").parquet(f"{work}/stage/b{i}")
+    return work
 
 
 @register(
@@ -2623,7 +2495,6 @@ _VOCAB_K = 200
 
 # deterministic query workload over the synthetic corpus vocabulary —
 # literal on both engines so the oracle reproduces scores bit-for-bit
-_BM25_TFS_CACHE: dict = {}
 _BM25_QUERIES = [
     (0, "spark table scan"),
     (1, "hash join merge"),
@@ -2684,17 +2555,22 @@ def q_bm25_topk(spark, sf_dir):
     queries = spark.createDataFrame(
         _BM25_QUERIES, "query_id int, query_text string"
     )
-    # the posting grain is the standing retrieval index: build (and
-    # plan) it once per session, serve every query batch from it
-    tfs = session_cached(
-        _BM25_TFS_CACHE,
-        spark,
-        sf_dir,
-        lambda: retrieval.doc_term_freqs(load_table(spark, sf_dir, "documents")),
-    )
     return retrieval.bm25_topk(
-        load_table(spark, sf_dir, "documents"), queries, top_k=_BM25_K, tfs=tfs
+        load_table(spark, sf_dir, "documents"),
+        queries,
+        top_k=_BM25_K,
+        tfs=_bm25_tfs(spark, sf_dir),
     )
+
+
+# the posting grain is the standing retrieval index of bm25_topk and
+# hybrid_rrf_topk: built (and planned) once per session, every query
+# batch is served from it
+@fixture("blocks")
+def _bm25_tfs(spark, sf_dir):
+    from .operators import retrieval
+
+    return retrieval.doc_term_freqs(load_table(spark, sf_dir, "documents"))
 
 
 _CHUNK_SIZE, _CHUNK_OVERLAP = 64, 16
@@ -3039,49 +2915,15 @@ _PASSAGE_K = 8
 # The positional k-word shingle table feeds all three ExactSubstr
 # word-grain consumers (duplicate_passages, exact_repeat_runs,
 # passage_scrub via the spans table) — at cluster scale it is a
-# written ingest artifact; land it once per (session, sf_dir) and
-# spread it over the cores (r12 optimization round: three identical
-# corpus-wide shingle builds per bench pass → one).
-_POS_SHINGLES_DIRS: dict = {}
-_POS_SHINGLES_DFS: dict = {}
-
-
-def _landed_parquet(dirs_cache, df_cache, spark, sf_dir, prefix, build):
-    """Corpus-sized session tables land as parquet ARTIFACTS under a
-    session workdir instead of localCheckpoint executor blocks (r13,
-    VERDICT r12 #4 / guide §5): blocks pin executor storage for the
-    session's lifetime and are NOT fault-tolerant (a lost executor
-    kills the lineage-truncated RDD), while the parquet artifact
-    costs disk only, survives executor loss, and gives every consumer
-    column pruning + predicate pushdown at the scan (e.g. the span
-    find's hash count reads `h` without the shingle strings). Disk
-    trees follow the _session_workdir lifecycle (dead-context
-    eviction + atexit rmtree); the read-back DataFrame is memoised so
-    schema inference runs once per session."""
-    sc = spark.sparkContext
-    for k in [k for k, (ctx, _) in df_cache.items() if ctx._jsc is None]:
-        del df_cache[k]
-    key = (sc.applicationId, sf_dir)
-    if key not in df_cache:
-        def populate(work: str) -> None:
-            build().write.mode("overwrite").parquet(f"{work}/data")
-
-        work = _session_workdir(dirs_cache, spark, sf_dir, prefix, populate)
-        df_cache[key] = (sc, spark.read.parquet(f"{work}/data"))
-    return df_cache[key][1]
-
-
+# written ingest artifact; corpus-sized, so it lands as parquet
+# (the span find's hash count reads `h` without the shingle strings),
+# spread over the cores (three identical corpus-wide shingle builds
+# per bench pass → one).
+@fixture("parquet")
 def _pos_shingles(spark, sf_dir):
-    return _landed_parquet(
-        _POS_SHINGLES_DIRS,
-        _POS_SHINGLES_DFS,
-        spark,
-        sf_dir,
-        "pos_shingles_",
-        lambda: dedup.positional_shingles(
-            load_table(spark, sf_dir, "documents"), k=_PASSAGE_K
-        ).repartition(_spread_n(spark, sf_dir)),
-    )
+    return dedup.positional_shingles(
+        load_table(spark, sf_dir, "documents"), k=_PASSAGE_K
+    ).repartition(_spread_n(spark, sf_dir))
 
 
 # r13: the r12 round memoised the verified-span table and had
@@ -3353,8 +3195,6 @@ def q_behavioral_report(spark, sf_dir):
 
 # ------------------------------------- round 6: BPE tokenizer training
 
-_BPE_CACHE: dict = {}
-
 _BPE_N_MERGES = 8
 _BPE_MIN_FREQ = 2
 
@@ -3459,60 +3299,38 @@ def _bpe_sql_ctes(
 def q_bpe_tokenize(spark, sf_dir):
     from .operators import bpe
 
-    docs = load_table(spark, sf_dir, "documents")
-    vocab = session_cached(
-        _BPE_CACHE,
-        spark,
-        sf_dir,
-        lambda: bpe.learn_bpe(spark, docs, n_merges=8, min_freq=2)[1],
-    )
-    return bpe.bpe_segment(vocab, docs)
+    _merges, _alphabet, vocab = _bpe_model(spark, sf_dir)
+    return bpe.bpe_segment(vocab, load_table(spark, sf_dir, "documents"))
 
 
-# merges + alphabet are PLAIN PYTHON (deterministic per sf_dir — the
-# learner's tie-breaks make them engine/parallelism-independent), so
-# unlike the DataFrame cache above this one never holds JVM state and
-# is safe across sessions.
-_BPE_MODEL_CACHE: dict[str, tuple[list, list]] = {}
-
-
+# The word-grain model, learned ONCE per session and read by
+# bpe_tokenize (the tokenized vocab table) and every encode/decode
+# query (merges + alphabet, plain Python — the learner's tie-breaks
+# make them engine/parallelism-independent).
+@fixture("value")
 def _bpe_model(spark, sf_dir):
     from .operators import bpe
 
-    model = _BPE_MODEL_CACHE.get(sf_dir)
-    if model is None:
-        docs = load_table(spark, sf_dir, "documents")
-        merges, _vocab = bpe.learn_bpe(spark, docs, n_merges=8, min_freq=2)
-        model = (merges, bpe.bpe_alphabet(docs))
-        _BPE_MODEL_CACHE[sf_dir] = model
-    return model
+    docs = load_table(spark, sf_dir, "documents")
+    merges, vocab = bpe.learn_bpe(
+        spark, docs, n_merges=_BPE_N_MERGES, min_freq=_BPE_MIN_FREQ
+    )
+    return merges, bpe.bpe_alphabet(docs), vocab
 
 
 # The encoded corpus (doc_id, n_tokens, token_ids) feeds bpe_encode AND
-# exact_repeat_runs_tokens — one segmentation+reassembly per (session,
-# sf_dir), like the bars/shingle/pair caches: a pipeline would land it
-# as a table at tokenize time, not re-encode per query.
-_BPE_ENC_DIRS: dict = {}
-_BPE_ENC_DFS: dict = {}
-
-
+# exact_repeat_runs_tokens — a pipeline would land it as a table at
+# tokenize time, not re-encode per query. Corpus-sized, so parquet;
+# spread before the write so the token-grain consumers' first stage
+# fans out over the cores.
+@fixture("parquet")
 def _bpe_encoded(spark, sf_dir):
     from .operators import bpe
 
-    merges, alphabet = _bpe_model(spark, sf_dir)
-    # parquet artifact, not executor blocks (r13 — see
-    # _landed_parquet); spread before the write so the token-grain
-    # consumers' first stage fans out over the cores
-    return _landed_parquet(
-        _BPE_ENC_DIRS,
-        _BPE_ENC_DFS,
-        spark,
-        sf_dir,
-        "bpe_encoded_",
-        lambda: bpe.bpe_encode(
-            load_table(spark, sf_dir, "documents"), merges, alphabet
-        ).repartition(_spread_n(spark, sf_dir)),
-    )
+    merges, alphabet, _vocab = _bpe_model(spark, sf_dir)
+    return bpe.bpe_encode(
+        load_table(spark, sf_dir, "documents"), merges, alphabet
+    ).repartition(_spread_n(spark, sf_dir))
 
 
 @register(
@@ -3640,38 +3458,26 @@ def q_exact_repeat_runs_tokens(spark, sf_dir):
 
 # ------------------------- round 8: snapshot tables (mini time travel)
 
-# work dirs per (applicationId, sf_dir): same lifecycle discipline as
-# _MV_SETUP (atexit + dead-context eviction).
-_SNAP_SETUP: dict = {}
-
-
-def _snap_setup(spark, sf_dir: str) -> str:
-    """Build the 4-version snapshot table once per (session, sf_dir):
-    v1 overwrite (keys %3==0), v2 append (%3==1), v3 compact,
-    v4 keyed upsert (+1.5 on %13==0 keys of the v1 slice)."""
+@fixture("dir")
+def _snap_setup(spark, sf_dir: str, work: str) -> str:
+    """The 4-version snapshot table: v1 overwrite (keys %3==0), v2
+    append (%3==1), v3 compact, v4 keyed upsert (+1.5 on %13==0 keys
+    of the v1 slice)."""
     from .sources import snapshots as snap
 
-    def populate(work: str) -> None:
-        table = f"{work}/orders_snap"
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_totalprice"
-        )
-        k3 = F.pmod(F.col("o_orderkey"), F.lit(3))
-        snap.snapshot_commit(
-            orders.filter(k3 == 0), table, mode="overwrite"
-        )
-        snap.snapshot_commit(orders.filter(k3 == 1), table, mode="append")
-        snap.snapshot_compact(spark, table)
-        updates = (
-            orders.filter(
-                (k3 == 0) & (F.pmod(F.col("o_orderkey"), F.lit(13)) == 0)
-            )
-            .withColumn("o_totalprice", F.col("o_totalprice") + 1.5)
-        )
-        snap.snapshot_upsert(spark, table, updates, key_cols=["o_orderkey"])
-
-    work = _session_workdir(_SNAP_SETUP, spark, sf_dir, "snap_table_", populate)
-    return f"{work}/orders_snap"
+    table = f"{work}/orders_snap"
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_totalprice"
+    )
+    k3 = F.pmod(F.col("o_orderkey"), F.lit(3))
+    snap.snapshot_commit(orders.filter(k3 == 0), table, mode="overwrite")
+    snap.snapshot_commit(orders.filter(k3 == 1), table, mode="append")
+    snap.snapshot_compact(spark, table)
+    updates = orders.filter(
+        (k3 == 0) & (F.pmod(F.col("o_orderkey"), F.lit(13)) == 0)
+    ).withColumn("o_totalprice", F.col("o_totalprice") + 1.5)
+    snap.snapshot_upsert(spark, table, updates, key_cols=["o_orderkey"])
+    return table
 
 
 @register(
@@ -4262,22 +4068,18 @@ def q_idle_rich_customers(spark, sf_dir):
     )
 
 
-# Staged 2-file events corpus for the streaming CDC query — same
-# session-cached disk-tree pattern as _MV_SETUP.
-_CDC_SETUP: dict = {}
-
-
-def _cdc_setup(spark, sf_dir: str) -> str:
-    def populate(work: str) -> None:
-        ev = load_table(spark, sf_dir, "events").select(
-            "user_id", "ts", "event_id", "event_type", "value"
-        )
-        for i in (0, 1):
-            ev.filter(F.pmod(F.col("event_id"), F.lit(2)) == i).coalesce(
-                1
-            ).write.mode("overwrite").parquet(f"{work}/stage/b{i}")
-
-    return _session_workdir(_CDC_SETUP, spark, sf_dir, "cdc_merge_", populate)
+# Staged 2-file events corpus for the streaming CDC query (the
+# _mv_setup shape).
+@fixture("dir")
+def _cdc_setup(spark, sf_dir: str, work: str) -> str:
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", "ts", "event_id", "event_type", "value"
+    )
+    for i in (0, 1):
+        ev.filter(F.pmod(F.col("event_id"), F.lit(2)) == i).coalesce(
+            1
+        ).write.mode("overwrite").parquet(f"{work}/stage/b{i}")
+    return work
 
 
 @register(
@@ -4800,14 +4602,7 @@ _HYBRID_IDS = "(3, 17, 41)"
 def q_hybrid_rrf_topk(spark, sf_dir):
     from .operators import retrieval
 
-    tfs = session_cached(
-        _BM25_TFS_CACHE,
-        spark,
-        sf_dir,
-        lambda: retrieval.doc_term_freqs(
-            load_table(spark, sf_dir, "documents")
-        ),
-    )
+    tfs = _bm25_tfs(spark, sf_dir)
     return retrieval.hybrid_rrf_topk(
         load_table(spark, sf_dir, "documents"),
         load_table(spark, sf_dir, "embeddings"),
@@ -5066,42 +4861,35 @@ def q_html_extraction(spark, sf_dir):
 
 # ------------------- round 9: snapshot row-delete + schema evolution
 
-_SNAP_EVO_SETUP: dict = {}
-
-
-def _snap_evo_setup(spark, sf_dir: str) -> str:
-    """Build the 4-version evolution table once per (session, sf_dir):
-    v1 overwrite (keys %5==0), v2 keyed DELETE (%35==0 — copy-on-write
-    of touched files), v3 add_column note (metadata-only, NULL
-    backfill on read), v4 append (%5==1 rows carrying note='late')."""
+@fixture("dir")
+def _snap_evo_setup(spark, sf_dir: str, work: str) -> str:
+    """The 4-version evolution table: v1 overwrite (keys %5==0), v2
+    keyed DELETE (%35==0 — copy-on-write of touched files), v3
+    add_column note (metadata-only, NULL backfill on read), v4 append
+    (%5==1 rows carrying note='late')."""
     from .sources import snapshots as snap
 
-    def populate(work: str) -> None:
-        table = f"{work}/orders_evo"
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_totalprice"
-        )
-        k5 = F.pmod(F.col("o_orderkey"), F.lit(5))
-        snap.snapshot_commit(
-            orders.filter(k5 == 0), table, mode="overwrite"
-        )
-        snap.snapshot_delete(
-            spark,
-            table,
-            orders.filter(
-                F.pmod(F.col("o_orderkey"), F.lit(35)) == 0
-            ).select("o_orderkey"),
-            key_cols=["o_orderkey"],
-        )
-        snap.snapshot_add_column(table, "note", "string")
-        snap.snapshot_commit(
-            orders.filter(k5 == 1).withColumn("note", F.lit("late")),
-            table,
-            mode="append",
-        )
-
-    work = _session_workdir(_SNAP_EVO_SETUP, spark, sf_dir, "snap_evo_", populate)
-    return f"{work}/orders_evo"
+    table = f"{work}/orders_evo"
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_totalprice"
+    )
+    k5 = F.pmod(F.col("o_orderkey"), F.lit(5))
+    snap.snapshot_commit(orders.filter(k5 == 0), table, mode="overwrite")
+    snap.snapshot_delete(
+        spark,
+        table,
+        orders.filter(F.pmod(F.col("o_orderkey"), F.lit(35)) == 0).select(
+            "o_orderkey"
+        ),
+        key_cols=["o_orderkey"],
+    )
+    snap.snapshot_add_column(table, "note", "string")
+    snap.snapshot_commit(
+        orders.filter(k5 == 1).withColumn("note", F.lit("late")),
+        table,
+        mode="append",
+    )
+    return table
 
 
 @register(
@@ -5443,19 +5231,15 @@ def q_triplet_mining(spark, sf_dir):
 
 
 # Two-batch staged documents stream for the count-min MV (mirror of
-# _mv_setup's orders staging; cached per (session, sf_dir))
-_DOCS_MV_SETUP: dict = {}
-
-
-def _docs_mv_setup(spark, sf_dir: str) -> str:
-    def populate(work: str) -> None:
-        docs = load_table(spark, sf_dir, "documents")
-        for i in (0, 1):
-            docs.filter(F.pmod(F.col("doc_id"), F.lit(2)) == i).coalesce(
-                1
-            ).write.mode("overwrite").parquet(f"{work}/stage/b{i}")
-
-    return _session_workdir(_DOCS_MV_SETUP, spark, sf_dir, "cm_mv_", populate)
+# _mv_setup's orders staging)
+@fixture("dir")
+def _docs_mv_setup(spark, sf_dir: str, work: str) -> str:
+    docs = load_table(spark, sf_dir, "documents")
+    for i in (0, 1):
+        docs.filter(F.pmod(F.col("doc_id"), F.lit(2)) == i).coalesce(
+            1
+        ).write.mode("overwrite").parquet(f"{work}/stage/b{i}")
+    return work
 
 
 @register(
@@ -5607,29 +5391,25 @@ def q_customer_distribution(spark, sf_dir):
 
 # ------------------------------------- round 9: snapshot file skipping
 
-# One year-partitioned stats-carrying snapshot table per (session,
-# sf_dir): seven appends, one per o_orderdate year, each recording
-# per-file min/max metrics for the date column — so a date-range scan
-# can prove most files irrelevant from the manifest alone.
-_SNAP_SCAN_SETUP: dict = {}
-
-
-def _snap_scan_setup(spark, sf_dir: str) -> str:
+# One year-partitioned stats-carrying snapshot table: seven appends,
+# one per o_orderdate year, each recording per-file min/max metrics
+# for the date column — so a date-range scan can prove most files
+# irrelevant from the manifest alone.
+@fixture("dir")
+def _snap_scan_setup(spark, sf_dir: str, work: str) -> str:
     from .sources import snapshots as snap
 
-    def populate(work: str) -> None:
-        table = f"{work}/orders_by_year"
-        orders = load_table(spark, sf_dir, "orders")
-        for y in range(1995, 2002):
-            snap.snapshot_commit(
-                orders.filter(F.year("o_orderdate") == y).coalesce(1),
-                table,
-                mode="append",
-                op=f"append_y{y}",
-                stats_cols=["o_orderdate"],
-            )
-
-    return _session_workdir(_SNAP_SCAN_SETUP, spark, sf_dir, "snap_scan_", populate)
+    table = f"{work}/orders_by_year"
+    orders = load_table(spark, sf_dir, "orders")
+    for y in range(1995, 2002):
+        snap.snapshot_commit(
+            orders.filter(F.year("o_orderdate") == y).coalesce(1),
+            table,
+            mode="append",
+            op=f"append_y{y}",
+            stats_cols=["o_orderdate"],
+        )
+    return work
 
 
 @register(
@@ -5782,7 +5562,7 @@ def q_bpe_roundtrip(spark, sf_dir):
     from .operators import bpe
     from .operators.text import words_col
 
-    merges, alphabet = _bpe_model(spark, sf_dir)
+    merges, alphabet, _vocab = _bpe_model(spark, sf_dir)
     decoded = bpe.bpe_decode(_bpe_encoded(spark, sf_dir), merges, alphabet)
     return decoded.select(
         "doc_id",
@@ -5883,28 +5663,23 @@ def q_warc_extraction(spark, sf_dir):
     )
 
 
-# mixed-charset WARC fixture landed once per (session, sf_dir): the
+# mixed-charset WARC fixture landed once per session: the
 # sequential walk (warc_extraction) and the cdx record-parallel path
 # (warc_cdx_extraction) read the SAME crawl drop — that is the point
 # of the two-strategies-one-contract pair; synthesizing it twice was
 # pure duplicated applyInPandas work (r12 optimization round). cdx is
 # a superset fixture: the sequential parser projects it away.
-_CHARSET_FILES_CACHE: dict = {}
-
-
+@fixture("blocks")
 def _charset_warc_files(spark, sf_dir):
     from .sources import warc
 
-    def build():
-        docs = load_table(spark, sf_dir, "documents")
-        # spread before the checkpoint: the files table coalesces to
-        # ONE partition by bytes, single-tasking both parsers' Python
-        # member walks (each pass pays the full gzip+parse serially)
-        return warc.synthesize_warc_corpus(
-            docs, with_cdx=True, charsets=True
-        ).repartition(_spread_n(spark, sf_dir))
-
-    return session_cached(_CHARSET_FILES_CACHE, spark, sf_dir, build)
+    docs = load_table(spark, sf_dir, "documents")
+    # spread before the checkpoint: the files table coalesces to
+    # ONE partition by bytes, single-tasking both parsers' Python
+    # member walks (each pass pays the full gzip+parse serially)
+    return warc.synthesize_warc_corpus(
+        docs, with_cdx=True, charsets=True
+    ).repartition(_spread_n(spark, sf_dir))
 
 
 # -------------------- round 10: trained language-ID (VERDICT #2)
@@ -6006,41 +5781,35 @@ def q_lang_id_trained(spark, sf_dir):
 
 # ------------- round 10: merge-on-read snapshot deletes (VERDICT #4)
 
-_SNAP_MOR_SETUP: dict = {}
-
-
-def _snap_mor_setup(spark, sf_dir: str) -> str:
-    """Build the 4-version MoR lifecycle table once per (session,
-    sf_dir): v1 overwrite (keys %4==0, 4 files), v2 MERGE-ON-READ
-    delete (%44==0 — one key file committed, zero data files
-    rewritten), v3 append (%4==1 rows PLUS the deleted keys
-    re-inserted — visible again because appended files are outside the
-    delete entry's applies_to scope), v4 compact (folds the delete
+@fixture("dir")
+def _snap_mor_setup(spark, sf_dir: str, work: str) -> str:
+    """The 4-version MoR lifecycle table: v1 overwrite (keys %4==0, 4
+    files), v2 MERGE-ON-READ delete (%44==0 — one key file committed,
+    zero data files rewritten), v3 append (%4==1 rows PLUS the deleted
+    keys re-inserted — visible again because appended files are outside
+    the delete entry's applies_to scope), v4 compact (folds the delete
     entry into plain data files)."""
     from .sources import snapshots as snap
 
-    def populate(work: str) -> None:
-        table = f"{work}/orders_mor"
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_totalprice"
-        )
-        k4 = F.pmod(F.col("o_orderkey"), F.lit(4))
-        k44 = F.pmod(F.col("o_orderkey"), F.lit(44))
-        snap.snapshot_commit(
-            orders.filter(k4 == 0).repartition(4), table, mode="overwrite"
-        )
-        snap.snapshot_delete_mor(
-            spark, table,
-            orders.filter(k44 == 0).select("o_orderkey"),
-            key_cols=["o_orderkey"],
-        )
-        snap.snapshot_commit(
-            orders.filter((k4 == 1) | (k44 == 0)), table, mode="append"
-        )
-        snap.snapshot_compact(spark, table)
-
-    work = _session_workdir(_SNAP_MOR_SETUP, spark, sf_dir, "snap_mor_", populate)
-    return f"{work}/orders_mor"
+    table = f"{work}/orders_mor"
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_totalprice"
+    )
+    k4 = F.pmod(F.col("o_orderkey"), F.lit(4))
+    k44 = F.pmod(F.col("o_orderkey"), F.lit(44))
+    snap.snapshot_commit(
+        orders.filter(k4 == 0).repartition(4), table, mode="overwrite"
+    )
+    snap.snapshot_delete_mor(
+        spark, table,
+        orders.filter(k44 == 0).select("o_orderkey"),
+        key_cols=["o_orderkey"],
+    )
+    snap.snapshot_commit(
+        orders.filter((k4 == 1) | (k44 == 0)), table, mode="append"
+    )
+    snap.snapshot_compact(spark, table)
+    return table
 
 
 @register(
@@ -6132,10 +5901,8 @@ def q_image_jpeg_neardup(spark, sf_dir):
 
 # ----------- round 10: position-grain MoR deletes (deletion vectors)
 
-_SNAP_POS_SETUP: dict = {}
-
-
-def _snap_pos_setup(spark, sf_dir: str) -> str:
+@fixture("dir")
+def _snap_pos_setup(spark, sf_dir: str, work: str) -> str:
     """3-version position-delete lifecycle on a DUPLICATE-KEY table:
     v1 overwrite = (orders %6==0, price as-is) ∪ (orders %12==0, price
     +1e6 — a distinguishable physical twin of every %12 key), v2
@@ -6144,24 +5911,21 @@ def _snap_pos_setup(spark, sf_dir: str) -> str:
     position file into plain data)."""
     from .sources import snapshots as snap
 
-    def populate(work: str) -> None:
-        table = f"{work}/orders_pos"
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_totalprice"
-        )
-        a = orders.filter(F.pmod(F.col("o_orderkey"), F.lit(6)) == 0)
-        b = orders.filter(
-            F.pmod(F.col("o_orderkey"), F.lit(12)) == 0
-        ).withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1000000.0))
-        snap.snapshot_commit(a.unionByName(b), table, mode="overwrite")
-        snap.snapshot_delete_mor_positions(
-            spark, table,
-            "o_totalprice >= 1000000 AND o_orderkey % 24 = 0",
-        )
-        snap.snapshot_compact(spark, table)
-
-    work = _session_workdir(_SNAP_POS_SETUP, spark, sf_dir, "snap_pos_", populate)
-    return f"{work}/orders_pos"
+    table = f"{work}/orders_pos"
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_totalprice"
+    )
+    a = orders.filter(F.pmod(F.col("o_orderkey"), F.lit(6)) == 0)
+    b = orders.filter(
+        F.pmod(F.col("o_orderkey"), F.lit(12)) == 0
+    ).withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1000000.0))
+    snap.snapshot_commit(a.unionByName(b), table, mode="overwrite")
+    snap.snapshot_delete_mor_positions(
+        spark, table,
+        "o_totalprice >= 1000000 AND o_orderkey % 24 = 0",
+    )
+    snap.snapshot_compact(spark, table)
+    return table
 
 
 @register(
@@ -6271,29 +6035,23 @@ def _oracle_url_dedup() -> str:
     FROM ranked WHERE rn = 1"""
 
 
-# parsed messy-URL crawl pages, landed once per (session, sf_dir) —
-# the crawl-family session-cache convention (8e95a10): url_dedup,
+# parsed messy-URL crawl pages, landed once per session: url_dedup,
 # domain_curation and robots_gate all consume the SAME synthesized
 # fixture + binary parse; a real pipeline parses a crawl drop once
 # and every curation stage reads the landed table (r12 optimization
 # round: 3× the synthesize+parse subtree → 1×).
-_MESSY_PAGES_CACHE: dict = {}
-
-
+@fixture("blocks")
 def _messy_pages(spark, sf_dir):
     from .sources import warc
 
-    def build():
-        docs = load_table(spark, sf_dir, "documents")
-        files = warc.synthesize_warc_corpus(docs, messy_urls=True)
-        # spread before the checkpoint: the parsed pages coalesce to
-        # ONE partition by bytes, single-tasking every consumer's
-        # regex-heavy first stage (normalization, PSL, robots match)
-        return warc.parse_warc_records(files).filter(
-            F.col("ok") & (F.col("warc_type") == "response")
-        ).repartition(_spread_n(spark, sf_dir))
-
-    return session_cached(_MESSY_PAGES_CACHE, spark, sf_dir, build)
+    docs = load_table(spark, sf_dir, "documents")
+    files = warc.synthesize_warc_corpus(docs, messy_urls=True)
+    # spread before the checkpoint: the parsed pages coalesce to
+    # ONE partition by bytes, single-tasking every consumer's
+    # regex-heavy first stage (normalization, PSL, robots match)
+    return warc.parse_warc_records(files).filter(
+        F.col("ok") & (F.col("warc_type") == "response")
+    ).repartition(_spread_n(spark, sf_dir))
 
 
 # the URL-deduped frontier robots_gate consumes as INPUT (a real
@@ -6301,18 +6059,9 @@ def _messy_pages(spark, sf_dir):
 # r13: q_url_dedup no longer returns this memo — it computes its own
 # keep-first window per run (VERDICT r12 #1); this landed view exists
 # only so robots_gate's input matches the _deduped_links_pages shape.
-_MESSY_DEDUP_CACHE: dict = {}
-
-
+@fixture("blocks")
 def _messy_deduped(spark, sf_dir):
-    return session_cached(
-        _MESSY_DEDUP_CACHE,
-        spark,
-        sf_dir,
-        lambda: url_ops.url_dedup(
-            _messy_pages(spark, sf_dir), "url", "warc_date"
-        ),
-    )
+    return url_ops.url_dedup(_messy_pages(spark, sf_dir), "url", "warc_date")
 
 
 @register(
@@ -6550,8 +6299,6 @@ def q_quality_rules(spark, sf_dir):
 
 # ------------- round 11: streaming WARC crawl ingestion (VERDICT #5)
 
-_STREAM_WARC_SETUP: dict = {}
-
 
 # crawl-file size cap for the streaming fixture: a WARC file is ONE
 # sequential parse unit (tape format), so per-batch latency is bounded
@@ -6571,39 +6318,34 @@ def _warc_stream_dpf(n: int) -> int:
     return max(1, min(_WARC_STREAM_DPF_CAP, (n + 1) // 2))
 
 
-def _stream_warc_setup(spark, sf_dir: str) -> str:
+@fixture("dir")
+def _stream_warc_setup(spark, sf_dir: str, work: str) -> str:
     """Staged ingest fixture: the base corpus (doc_id % 3 == 0) is
     already in the standing LSH index; the increments arrive as real
     .warc.gz files on disk (docs-per-file from `_warc_stream_dpf`,
-    every 2nd file torn mid-last-member), written executor-side.
-    Cached per (session, sf_dir) like every staged-ingest tree."""
+    every 2nd file torn mid-last-member), written executor-side."""
+    import os
 
-    def populate(work: str) -> None:
-        import os
+    from .sources import warc
 
-        from .sources import warc
-
-        docs = load_table(spark, sf_dir, "documents")
-        base = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 0)
-        dedup.minhash_write_index(base, f"{work}/index", k_shingle=3)
-        inc = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) != 0)
-        n = inc.count()
-        files = warc.synthesize_warc_corpus(
-            inc, docs_per_file=_warc_stream_dpf(n), torn_every=2
-        )
-        out_dir = os.path.join(work, "stream")
-        os.makedirs(out_dir, exist_ok=True)
-
-        def write_part(rows):
-            for r in rows:
-                with open(os.path.join(out_dir, r.warc_file), "wb") as f:
-                    f.write(bytes(r.content))
-
-        files.foreachPartition(write_part)
-
-    return _session_workdir(
-        _STREAM_WARC_SETUP, spark, sf_dir, "streaming_warc_", populate
+    docs = load_table(spark, sf_dir, "documents")
+    base = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 0)
+    dedup.minhash_write_index(base, f"{work}/index", k_shingle=3)
+    inc = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) != 0)
+    n = inc.count()
+    files = warc.synthesize_warc_corpus(
+        inc, docs_per_file=_warc_stream_dpf(n), torn_every=2
     )
+    out_dir = os.path.join(work, "stream")
+    os.makedirs(out_dir, exist_ok=True)
+
+    def write_part(rows):
+        for r in rows:
+            with open(os.path.join(out_dir, r.warc_file), "wb") as f:
+                f.write(bytes(r.content))
+
+    files.foreachPartition(write_part)
+    return work
 
 
 def _oracle_streaming_warc_ingest() -> str:
@@ -7114,7 +6856,7 @@ def _oracle_host_pagerank() -> str:
 def q_host_pagerank(spark, sf_dir):
     from .operators import links
 
-    # consumes the session-cached deduped links crawl (shared with
+    # consumes the deduped links crawl fixture (shared with
     # image_caption_pairs — the landed-table pipeline shape)
     return links.host_pagerank(_deduped_links_pages(spark, sf_dir))
 
@@ -7183,21 +6925,17 @@ def _bpe_bytes_sql_ctes(
     return ",\n    ".join(parts)
 
 
-# byte-level model cache: plain Python (merges list), deterministic
-# per sf_dir — the _BPE_MODEL_CACHE contract
-_BPE_BYTES_MODEL_CACHE: dict[str, list] = {}
-
-
+# the byte-level merge table (the _bpe_model contract at byte grain)
+@fixture("value")
 def _bpe_bytes_model(spark, sf_dir):
     from .operators import bpe
 
-    merges = _BPE_BYTES_MODEL_CACHE.get(sf_dir)
-    if merges is None:
-        docs = load_table(spark, sf_dir, "documents")
-        merges, _tab = bpe.learn_bpe_bytes(
-            spark, docs, n_merges=_BPE_N_MERGES, min_freq=_BPE_MIN_FREQ
-        )
-        _BPE_BYTES_MODEL_CACHE[sf_dir] = merges
+    merges, _tab = bpe.learn_bpe_bytes(
+        spark,
+        load_table(spark, sf_dir, "documents"),
+        n_merges=_BPE_N_MERGES,
+        min_freq=_BPE_MIN_FREQ,
+    )
     return merges
 
 
@@ -7620,40 +7358,32 @@ def q_domain_token_budget(spark, sf_dir):
 
 # ----- round 12: shared crawl-family session caches (bench hygiene)
 #
-# The bars/shingle/BPE-enc convention: inputs several queries consume
-# land ONCE per (session, sf_dir) — a real pipeline materializes the
-# deduped crawl and the curated corpus as tables, it does not
-# re-parse the WARC drop per downstream query.
+# A real pipeline materializes the deduped crawl and the curated corpus
+# as tables; it does not re-parse the WARC drop per downstream query.
 
 # deduped messy+links crawl pages: host_pagerank + image_caption_pairs
-_LINKS_PAGES_CACHE: dict = {}
-
-
+@fixture("blocks")
 def _deduped_links_pages(spark, sf_dir):
     from .sources import warc
 
-    def build():
-        docs = load_table(spark, sf_dir, "documents")
-        files = warc.synthesize_warc_corpus(
-            docs, messy_urls=True, links=True
-        )
-        pages = warc.parse_warc_records(files).filter(
-            F.col("ok") & (F.col("warc_type") == "response")
-        )
-        # spread the landed table over the cores BEFORE the checkpoint
-        # (r12 optimization round): the dedup window's output is a few
-        # MB, so AQE coalesces it to ONE partition — bytes are a
-        # terrible proxy for per-row compute on HTML, and the
-        # regex-heavy consumers (href harvest, img-pair mining) were
-        # running single-task off the cache (measured 6.8 s → 0.9 s
-        # for the edge build at sf0.1). defaultParallelism scales with
-        # the cluster; content is unchanged (round-robin repartition).
-        return (
-            url_ops.url_dedup(pages, "url", "warc_date")
-            .select("url_norm", "html")
-            .repartition(_spread_n(spark, sf_dir))
-        )
-    return session_cached(_LINKS_PAGES_CACHE, spark, sf_dir, build)
+    docs = load_table(spark, sf_dir, "documents")
+    files = warc.synthesize_warc_corpus(docs, messy_urls=True, links=True)
+    pages = warc.parse_warc_records(files).filter(
+        F.col("ok") & (F.col("warc_type") == "response")
+    )
+    # spread the landed table over the cores BEFORE the checkpoint:
+    # the dedup window's output is a few MB, so AQE coalesces it to
+    # ONE partition — bytes are a terrible proxy for per-row compute
+    # on HTML, and the regex-heavy consumers (href harvest, img-pair
+    # mining) were running single-task off the cache (measured
+    # 6.8 s → 0.9 s for the edge build at sf0.1 on 32 cores).
+    # defaultParallelism scales with the cluster; content is
+    # unchanged (round-robin repartition).
+    return (
+        url_ops.url_dedup(pages, "url", "warc_date")
+        .select("url_norm", "html")
+        .repartition(_spread_n(spark, sf_dir))
+    )
 
 
 # the landed PARSE of the messy+charset crawl drop: the ingest
@@ -7662,38 +7392,26 @@ def _deduped_links_pages(spark, sf_dir):
 # crawl COMPOSITION itself runs inside each consumer's plan (r13,
 # VERDICT r12 #1: q_crawl_corpus previously returned the memoised
 # corpus itself, so the bench measured an RDD scan).
-_CRAWL_PARSED_CACHE: dict = {}
-
-
+@fixture("blocks")
 def _crawl_parsed_pages(spark, sf_dir):
     from .sources import warc
 
-    def build():
-        docs = load_table(spark, sf_dir, "documents")
-        files = warc.synthesize_warc_corpus(
-            docs, messy_urls=True, charsets=True
-        )
-        # spread before the checkpoint (the AQE single-partition trap,
-        # r12): consumers run regex-heavy HTML work off this table
-        return warc.parse_warc_records(files).repartition(
-            _spread_n(spark, sf_dir)
-        )
-    return session_cached(_CRAWL_PARSED_CACHE, spark, sf_dir, build)
+    docs = load_table(spark, sf_dir, "documents")
+    files = warc.synthesize_warc_corpus(docs, messy_urls=True, charsets=True)
+    # spread before the checkpoint (the AQE single-partition trap):
+    # consumers run regex-heavy HTML work off this table
+    return warc.parse_warc_records(files).repartition(_spread_n(spark, sf_dir))
 
 
 # the curated corpus as a landed table: domain_token_budget's INPUT
 # (the mixture table is planned FROM a landed curated corpus — its
 # own computation is the budget rollup, which runs in its plan)
-_CRAWL_CORPUS_CACHE: dict = {}
-
-
+@fixture("blocks")
 def _crawl_corpus_df(spark, sf_dir):
     from .plans.crawl import crawl_to_corpus
 
-    def build():
-        return crawl_to_corpus(
-            _crawl_parsed_pages(spark, sf_dir),
-            blocklist=_URL_BLOCKLIST,
-            quality_rules=_CRAWL_RULES,
-        )
-    return session_cached(_CRAWL_CORPUS_CACHE, spark, sf_dir, build)
+    return crawl_to_corpus(
+        _crawl_parsed_pages(spark, sf_dir),
+        blocklist=_URL_BLOCKLIST,
+        quality_rules=_CRAWL_RULES,
+    )

@@ -114,32 +114,3 @@ def regression_line(
     if group:
         return df.groupBy(*group).agg(*aggs)
     return df.agg(*aggs)
-
-
-# Per-SparkContext memo of reusable unresolved Column trees (r13):
-# large constant expression families (the 16-permutation minhash
-# aggregates, the 64 simhash vote sums, the PSL literal-set flags)
-# cost 0.2-1.3 s of py4j round trips to CONSTRUCT, and several hot
-# queries rebuilt them on every invocation. Unresolved Columns are
-# immutable and carry no data, but their py4j handles die with the
-# JVM — so the memo keys on applicationId and evicts dead contexts
-# (the session_cached convention).
-_CTX_COLUMN_MEMO: dict = {}
-
-
-def ctx_memo(tag, build):
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    if sc is None:  # no active context — nothing to pin the handles to
-        return build()
-    for k in [
-        k for k, (ctx, _) in _CTX_COLUMN_MEMO.items() if ctx._jsc is None
-    ]:
-        del _CTX_COLUMN_MEMO[k]
-    key = (sc.applicationId, tag)
-    ent = _CTX_COLUMN_MEMO.get(key)
-    if ent is None:
-        ent = (sc, build())
-        _CTX_COLUMN_MEMO[key] = ent
-    return ent[1]

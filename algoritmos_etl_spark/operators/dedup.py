@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..fixtures import fixture
 from .text import normalized_text, words_col
 
 MINHASH_HASHES = 16
@@ -326,24 +327,6 @@ def _verify_jaccard(
     )
 
 
-def minhash_signatures(
-    docs: DataFrame, n_hashes: int = MINHASH_HASHES, k_shingle: int = 3
-) -> DataFrame:
-    """MinHash signature columns h0..h{n-1}: min over k-word SHINGLES of
-    a seeded md5-prefix hash. One shingle-explode pass, n min-aggregates
-    (all partial/map-side).
-
-    Shingles, not unigram tokens, on purpose: natural-language docs
-    share so much vocabulary that token-Jaccard ≥ 0.2 forms a
-    near-complete candidate graph (measured: 56% of ALL pairs on the
-    test corpus — the banding join degenerates to a cross join).
-    Phrase-level shingles keep unrelated docs' similarity near zero, so
-    LSH buckets stay sparse — the property the whole scheme relies on
-    at scale."""
-    sh = doc_shingles(docs, k_shingle)
-    return _with_base_hash(sh).groupBy("doc_id").agg(*_minhash_aggs(n_hashes))
-
-
 def _with_base_hash(sh: DataFrame) -> DataFrame:
     """One md5-prefix hash per shingle row, reduced mod p."""
     return sh.withColumn(
@@ -351,29 +334,24 @@ def _with_base_hash(sh: DataFrame) -> DataFrame:
     )
 
 
-# shared per-SparkContext Column-tree memo (see functions.scalars):
-# the 16-permutation aggregate list cost ~0.25 s of py4j round trips
-# PER CALL — pure fixed driver cost the streaming path paid once per
-# MICRO-BATCH.
-from ..functions.scalars import ctx_memo as _ctx_memo  # noqa: E402
-
-
+# Column-tree fixtures: the 16-permutation aggregate list cost ~0.25 s
+# of py4j round trips PER CALL — pure fixed driver cost the streaming
+# path paid once per MICRO-BATCH.
+@fixture("value")
 def _minhash_aggs(n_hashes: int = MINHASH_HASHES) -> list:
     """Min-aggregates of the affine permutation family over `_h`."""
-    return _ctx_memo(
-        ("mh_aggs", n_hashes),
-        lambda: [
-            F.min(
-                F.pmod(
-                    F.lit(MINHASH_A[j]) * F.col("_h") + F.lit(MINHASH_B[j]),
-                    F.lit(MINHASH_PRIME),
-                )
-            ).alias(f"h{j}")
-            for j in range(n_hashes)
-        ],
-    )
+    return [
+        F.min(
+            F.pmod(
+                F.lit(MINHASH_A[j]) * F.col("_h") + F.lit(MINHASH_B[j]),
+                F.lit(MINHASH_PRIME),
+            )
+        ).alias(f"h{j}")
+        for j in range(n_hashes)
+    ]
 
 
+@fixture("value")
 def _band_structs(n_hashes: int, n_bands: int) -> list:
     rows_per_band = n_hashes // n_bands
     bands = []
@@ -393,12 +371,9 @@ def _band_structs(n_hashes: int, n_bands: int) -> list:
 def minhash_bands(sigs: DataFrame, n_bands: int = MINHASH_BANDS) -> DataFrame:
     """(doc_id, band, band_sig): md5 over each band's concatenated rows."""
     n_hashes = len([c for c in sigs.columns if c.startswith("h")])
-    bands = _ctx_memo(
-        ("mh_bands", n_hashes, n_bands),
-        lambda: _band_structs(n_hashes, n_bands),
-    )
     return sigs.select(
-        "doc_id", F.explode(F.array(*bands)).alias("bs")
+        "doc_id",
+        F.explode(F.array(*_band_structs(n_hashes, n_bands))).alias("bs"),
     ).select("doc_id", "bs.band", "bs.band_sig")
 
 
@@ -704,71 +679,59 @@ def simhash(
     disjoint bit ranges is carry-free, so the packed value is exact
     even when bit 63 lands set (negative long).
     """
+    hash_cols, vote_aggs, pack_cols, full_col = _simhash_cols(bits, chunks)
+    votes = (
+        doc_tokens(docs)
+        .select("doc_id", *hash_cols)
+        .groupBy("doc_id")
+        .agg(*vote_aggs)
+    )
+    return votes.select("doc_id", *pack_cols).withColumn("simhash", full_col)
+
+
+# The Column families of `simhash` are pure functions of (bits, chunks)
+# — ~150 py4j expression constructions that cost ~1.3 s PER CALL on the
+# registry's hot path, so they are a session fixture.
+@fixture("value")
+def _simhash_cols(bits: int, chunks: int) -> tuple:
+    """(per-chunk token hashes, per-bit vote sums, per-chunk packed
+    values, the full packed hash)."""
     chunk_bits = bits // chunks
-    toks = doc_tokens(docs)
-
-    # the three Column families below are pure functions of (bits,
-    # chunks) — ~150 py4j expression constructions that cost ~1.3 s
-    # PER CALL on this registry's hot path (r13; the bench invokes
-    # simhash once per pass). Memoise per SparkContext (_ctx_memo).
-    def _hash_cols() -> list:
-        base = F.pmod(
-            _tok_hash(F.lit("sh"), F.col("token")), F.lit(MINHASH_PRIME)
+    base = F.pmod(_tok_hash(F.lit("sh"), F.col("token")), F.lit(MINHASH_PRIME))
+    hash_cols = [
+        F.pmod(
+            F.lit(SIMHASH_A[c]) * base + F.lit(SIMHASH_B[c]),
+            F.lit(MINHASH_PRIME),
+        ).alias(f"h{c}")
+        for c in range(chunks)
+    ]
+    vote_aggs = [
+        F.sum(
+            F.when(
+                F.expr(f"shiftright(h{c}, {b})").bitwiseAND(F.lit(1)) == 1, 1
+            ).otherwise(-1)
+        ).alias(f"s_{c}_{b}")
+        for c in range(chunks)
+        for b in range(chunk_bits)
+    ]
+    pack_cols = [
+        sum(
+            (
+                F.when(F.col(f"s_{c}_{b}") >= 0, F.lit(1 << b)).otherwise(
+                    F.lit(0)
+                )
+                for b in range(chunk_bits)
+            ),
+            F.lit(0),
         )
-        return [
-            F.pmod(
-                F.lit(SIMHASH_A[c]) * base + F.lit(SIMHASH_B[c]),
-                F.lit(MINHASH_PRIME),
-            ).alias(f"h{c}")
-            for c in range(chunks)
-        ]
-
-    def _vote_aggs() -> list:
-        return [
-            F.sum(
-                F.when(
-                    F.expr(f"shiftright(h{c}, {b})").bitwiseAND(F.lit(1))
-                    == 1,
-                    1,
-                ).otherwise(-1)
-            ).alias(f"s_{c}_{b}")
-            for c in range(chunks)
-            for b in range(chunk_bits)
-        ]
-
-    def _pack_cols() -> list:
-        chunk_cols = []
-        for c in range(chunks):
-            packed_chunk = sum(
-                (
-                    F.when(
-                        F.col(f"s_{c}_{b}") >= 0, F.lit(1 << b)
-                    ).otherwise(F.lit(0))
-                    for b in range(chunk_bits)
-                ),
-                F.lit(0),
-            )
-            chunk_cols.append(packed_chunk.cast("long").alias(f"c{c}"))
-        return chunk_cols
-
-    def _full_col():
-        full = F.col("c0").cast("long")
-        for c in range(1, chunks):
-            full = full + F.shiftleft(F.col(f"c{c}"), c * chunk_bits)
-        return full
-
-    hashed = toks.select(
-        "doc_id", *_ctx_memo(("sh_hash", bits, chunks), _hash_cols)
-    )
-    votes = hashed.groupBy("doc_id").agg(
-        *_ctx_memo(("sh_votes", bits, chunks), _vote_aggs)
-    )
-    out = votes.select(
-        "doc_id", *_ctx_memo(("sh_pack", bits, chunks), _pack_cols)
-    )
-    return out.withColumn(
-        "simhash", _ctx_memo(("sh_full", bits, chunks), _full_col)
-    )
+        .cast("long")
+        .alias(f"c{c}")
+        for c in range(chunks)
+    ]
+    full_col = F.col("c0").cast("long")
+    for c in range(1, chunks):
+        full_col = full_col + F.shiftleft(F.col(f"c{c}"), c * chunk_bits)
+    return hash_cols, vote_aggs, pack_cols, full_col
 
 
 def simhash_neardup_pairs(

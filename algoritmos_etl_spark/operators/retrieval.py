@@ -75,7 +75,7 @@ def bm25_topk(
     # three consumers (corpus stats, df, the scored join) and no CSE
     # across plan branches — materialize the posting grain once. A
     # caller serving many query batches should build it ONCE and pass
-    # it in (the registry session-caches it): localCheckpoint plans
+    # it in (the registry holds it as a session fixture): localCheckpoint plans
     # eagerly even with eager=False, so re-deriving it per call pays
     # the full analyze+optimize+codegen chain every time.
     if tfs is None:

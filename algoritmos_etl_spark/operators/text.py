@@ -24,7 +24,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.scalars import ctx_memo
+from ..fixtures import fixture
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
 
@@ -333,23 +333,6 @@ def lang_id(docs: DataFrame) -> DataFrame:
 LANGS = ("en", "es", "de", "fr")
 LANGID_BUCKETS = 2048
 LANGID_N = 3
-
-
-def char_ngrams_col(text: Column, n: int = LANGID_N) -> Column:
-    """Character n-grams over the ASCII-normalized text — the
-    fastText/CLD3 feature space (hashed char-n-grams), restricted to
-    [a-z ] so Java and DuckDB normalize byte-identically (non-ASCII
-    signals like accents fold into the space separator — the
-    documented feature floor of the stdlib-only tier). Normalization:
-    lower → every non-[a-z] run becomes one space → trim."""
-    norm = F.trim(F.regexp_replace(F.lower(text), "[^a-z]+", " "))
-    return F.when(
-        F.length(norm) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.length(norm) - (n - 1)),
-            lambda i: F.substr(norm, i, F.lit(n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
 
 
 def lang_id_trained(
@@ -742,41 +725,41 @@ def text_quality_gate(docs: DataFrame) -> DataFrame:
     """The projection-only slice of the curation signals: quality stats
     + predicted language in ONE select — what a filter gate needs,
     without the n-gram shuffle `text_quality` adds."""
-    def _cols() -> list:
-        # pure functions of module constants (~60 py4j constructions)
-        # — memoised per SparkContext (r13, the ctx_memo convention)
-        words = words_col(F.col("text"))
-        n_words = F.size(words)
-        stop_hits = F.size(F.filter(words, lambda w: w.isin(*STOPWORDS)))
-        lowered = F.lower(F.col("text"))
-        scores = {
-            lang: sum(
-                (_marker_count(lowered, m) for m in markers),
-                F.lit(0).cast("long"),
-            )
-            for lang, markers in LANG_MARKERS.items()
-        }
-        en, es, de, fr = (scores[lang] for lang in ("en", "es", "de", "fr"))
-        pred = (
-            F.when((en == 0) & (es == 0) & (de == 0) & (fr == 0), F.lit("und"))
-            .when((en >= es) & (en >= de) & (en >= fr), F.lit("en"))
-            .when((es >= de) & (es >= fr), F.lit("es"))
-            .when(de >= fr, F.lit("de"))
-            .otherwise(F.lit("fr"))
-        )
-        return [
-            n_words.alias("n_words"),
-            F.round(
-                F.when(n_words > 0, stop_hits.cast("double") / n_words)
-                .otherwise(0.0),
-                6,
-            ).alias("stopword_ratio"),
-            pred.alias("pred_lang"),
-        ]
+    return docs.select("doc_id", *_quality_gate_cols())
 
-    return docs.select(
-        "doc_id", *ctx_memo(("text_quality_gate",), _cols)
+
+# pure functions of module constants (~60 py4j constructions), so a
+# Column-tree session fixture
+@fixture("value")
+def _quality_gate_cols() -> list:
+    words = words_col(F.col("text"))
+    n_words = F.size(words)
+    stop_hits = F.size(F.filter(words, lambda w: w.isin(*STOPWORDS)))
+    lowered = F.lower(F.col("text"))
+    scores = {
+        lang: sum(
+            (_marker_count(lowered, m) for m in markers),
+            F.lit(0).cast("long"),
+        )
+        for lang, markers in LANG_MARKERS.items()
+    }
+    en, es, de, fr = (scores[lang] for lang in ("en", "es", "de", "fr"))
+    pred = (
+        F.when((en == 0) & (es == 0) & (de == 0) & (fr == 0), F.lit("und"))
+        .when((en >= es) & (en >= de) & (en >= fr), F.lit("en"))
+        .when((es >= de) & (es >= fr), F.lit("es"))
+        .when(de >= fr, F.lit("de"))
+        .otherwise(F.lit("fr"))
     )
+    return [
+        n_words.alias("n_words"),
+        F.round(
+            F.when(n_words > 0, stop_hits.cast("double") / n_words)
+            .otherwise(0.0),
+            6,
+        ).alias("stopword_ratio"),
+        pred.alias("pred_lang"),
+    ]
 
 
 def curation_gate_col(text: Column) -> Column:

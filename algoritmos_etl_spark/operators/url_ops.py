@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.scalars import ctx_memo
+from ..fixtures import fixture
 
 # tracking parameters removed by normalization — the published
 # cross-site tracking set (Google Analytics utm_*, Google/Facebook/
@@ -270,6 +270,58 @@ def _psl_depth_sets() -> tuple[dict, dict, dict]:
     return normal, wild, exc
 
 
+# The literal-set flag trees (~200 suffixes across three rule kinds)
+# cost ~0.3 s of py4j construction per call, and every tree is a pure
+# function of (host_col, the compile-time rule table): a Column-tree
+# session fixture.
+@fixture("value")
+def _psl_cols(host_col: str, p: str, m: int) -> tuple:
+    """(label count, per-depth tails, public-suffix depth, registrable
+    domain) over the staged `{p}_*` columns."""
+    host = F.col(host_col)
+    normal, wild, exc = _psl_depth_sets()
+
+    tails = {
+        k: F.when(
+            F.col(f"{p}_n") >= k, F.substring_index(host, ".", -k)
+        )
+        for k in range(1, m + 1)
+    }
+
+    def flag(sets: dict, k: int) -> Column:
+        keys = sets.get(k)
+        if not keys:
+            return F.lit(False)
+        return F.coalesce(F.col(f"{p}_t{k}").isin(*keys), F.lit(False))
+
+    # ps depth = max(normal k, wildcard k+1, default 1)
+    ps = F.lit(1)
+    for k in range(1, m + 1):
+        ps = F.greatest(
+            ps,
+            F.when(flag(normal, k), F.lit(k)).otherwise(F.lit(1)),
+            F.when(flag(wild, k), F.lit(k + 1)).otherwise(F.lit(1)),
+        )
+
+    # exception at depth k: that exact tail is registrable; else
+    # registrable = the last ps+1 labels (substring_index handles
+    # the count arithmetically — no per-depth CASE ladder), or the
+    # whole host when the host IS a public suffix
+    reg = None
+    for k in range(m, 0, -1):
+        arm = (flag(exc, k), F.col(f"{p}_t{k}"))
+        reg = F.when(*arm) if reg is None else reg.when(*arm)
+    deeper = F.expr(
+        f"substring_index({host_col}, '.', -({p}_ps + 1))"
+    )
+    reg = reg.otherwise(
+        F.when(F.col(f"{p}_n") > F.col(f"{p}_ps"), deeper).otherwise(
+            host
+        )
+    )
+    return F.size(F.split(host, "\\.")), tails, ps, reg
+
+
 def with_registrable_domain_psl(
     df: DataFrame, host_col: str, out_col: str = "domain"
 ) -> DataFrame:
@@ -297,58 +349,7 @@ def with_registrable_domain_psl(
     formulation — same rule table, same result."""
     m = _PSL_MAX_LABELS
     p = "_psl"
-
-    def _build_cols():
-        # the literal-set flag trees (~200 suffixes across three rule
-        # kinds) cost ~0.3 s of py4j construction per call — memoised
-        # per SparkContext (r13), since every tree is a pure function
-        # of (host_col, the compile-time rule table)
-        host = F.col(host_col)
-        normal, wild, exc = _psl_depth_sets()
-
-        tails = {
-            k: F.when(
-                F.col(f"{p}_n") >= k, F.substring_index(host, ".", -k)
-            )
-            for k in range(1, m + 1)
-        }
-
-        def flag(sets: dict, k: int) -> Column:
-            keys = sets.get(k)
-            if not keys:
-                return F.lit(False)
-            return F.coalesce(F.col(f"{p}_t{k}").isin(*keys), F.lit(False))
-
-        # ps depth = max(normal k, wildcard k+1, default 1)
-        ps = F.lit(1)
-        for k in range(1, m + 1):
-            ps = F.greatest(
-                ps,
-                F.when(flag(normal, k), F.lit(k)).otherwise(F.lit(1)),
-                F.when(flag(wild, k), F.lit(k + 1)).otherwise(F.lit(1)),
-            )
-
-        # exception at depth k: that exact tail is registrable; else
-        # registrable = the last ps+1 labels (substring_index handles
-        # the count arithmetically — no per-depth CASE ladder), or the
-        # whole host when the host IS a public suffix
-        reg = None
-        for k in range(m, 0, -1):
-            arm = (flag(exc, k), F.col(f"{p}_t{k}"))
-            reg = F.when(*arm) if reg is None else reg.when(*arm)
-        deeper = F.expr(
-            f"substring_index({host_col}, '.', -({p}_ps + 1))"
-        )
-        reg = reg.otherwise(
-            F.when(F.col(f"{p}_n") > F.col(f"{p}_ps"), deeper).otherwise(
-                host
-            )
-        )
-        return F.size(F.split(host, "\\.")), tails, ps, reg
-
-    n_col, tails, ps, reg = ctx_memo(
-        ("psl_cols", host_col, out_col), _build_cols
-    )
+    n_col, tails, ps, reg = _psl_cols(host_col, p, m)
     # one withColumns per STAGE (not per column): the staged
     # projection boundaries that keep each subexpression under
     # Janino's method limit are preserved, while the plan-op count —

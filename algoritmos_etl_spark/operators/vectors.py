@@ -175,7 +175,7 @@ def lsh_topk(
     the standard LSH shape for embedding search at scale (one table of
     many planes collapses recall; see `lsh_signatures`). Recall vs
     `cosine_topk` is pinned by tests. Pass `sigs` (a materialized
-    `lsh_signatures` result — the session cache in driver_queries_ext
+    `lsh_signatures` result — the `_lsh_sigs` session fixture
     does) to share one signature table across every LSH consumer; at
     cluster scale that table is a written index, computed at ingest.
     Candidate ids join back to the columnar source for vectors, so the
@@ -243,7 +243,7 @@ def lsh_signatures(
 ) -> DataFrame:
     """Multi-table hyperplane LSH signatures: (vec_id, tbl, sig) only —
     the narrow table every LSH consumer joins on. Vectors are NOT
-    carried: a materialized signature table (the session cache, or a
+    carried: a materialized signature table (the session fixture, or a
     written index at cluster scale) stays ~12 bytes/row, so candidate
     self-joins broadcast/prune instead of dragging the embedding arrays
     through every shuffle (measured 2× on the near-dup query when the

@@ -421,3 +421,114 @@ def test_corpus_sized_session_tables_land_as_parquet_not_blocks(spark):
     assert "shingle" not in plan.split("ReadSchema")[-1], plan
     after = session_cache_storage_bytes(spark)
     assert after - before == 0, (before, after)
+
+
+def test_fixture_first_access_from_many_threads_builds_once(spark):
+    """Threads that ask for the same fixture at once (the streaming
+    thread pools) cause exactly one build and leave one entry."""
+    import sys
+    import threading
+    import time
+
+    from algoritmos_etl_spark import fixtures
+
+    builds = []
+
+    @fixtures.fixture("value")
+    def _probe(tag):
+        builds.append(tag)
+        time.sleep(0.05)  # hold the check-then-insert window open
+        return object()
+
+    n = 16  # more threads than cores
+    got = []
+    barrier = threading.Barrier(n)
+
+    def worker():
+        barrier.wait(timeout=30)
+        got.append(_probe("race"))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert builds == ["race"]
+    assert len(got) == n and all(g is got[0] for g in got)
+    name = f"{_probe.__module__}.{_probe.__qualname__}"
+    assert [k[1] for k in fixtures._STORE].count(name) == 1
+
+
+def test_fixture_entries_of_a_stopped_context_are_evicted_with_trees(spark):
+    """After a context stops, the next fixture access evicts that
+    context's entries and removes the `dir`/`parquet` trees they own."""
+    import os
+    import types
+
+    from pyspark.sql import SparkSession
+
+    from algoritmos_etl_spark import fixtures
+
+    class _Session(SparkSession):
+        """The live session seen through a context the test can stop."""
+
+        def __init__(self, real):
+            self._real = real
+            self._ctx = types.SimpleNamespace(
+                applicationId="stopped-app", _jsc=object()
+            )
+
+        @property
+        def sparkContext(self):
+            return self._ctx
+
+        @property
+        def read(self):
+            return self._real.read
+
+    @fixtures.fixture("dir")
+    def _probe_tree(session, work):
+        open(os.path.join(work, "part"), "w").close()
+        return work
+
+    @fixtures.fixture("parquet")
+    def _probe_table(session):
+        return spark.range(3)
+
+    ghost = _Session(spark)
+    _probe_tree(ghost)
+    assert _probe_table(ghost).count() == 3
+    trees = [e[2] for k, e in fixtures._STORE.items() if k[0] == "stopped-app"]
+    assert len(trees) == 2 and all(os.path.isdir(t) for t in trees)
+
+    ghost.sparkContext._jsc = None  # what SparkContext.stop() does
+    live = _probe_tree(spark)  # any access runs the eviction pass
+    assert not [k for k in fixtures._STORE if k[0] == "stopped-app"]
+    assert not any(os.path.exists(t) for t in trees)
+    assert os.path.isdir(live)
+
+
+def test_blocks_fixtures_stay_under_the_storage_ceiling(spark):
+    """Every `blocks` fixture built and materialized at sf0.001 keeps
+    the session's executor storage under fixtures.BLOCKS_CEILING_BYTES
+    — corpus-sized tables must land as `parquet` instead."""
+    from algoritmos_etl_spark import driver_queries, driver_queries_ext, fixtures
+    from algoritmos_etl_spark.driver_queries import session_cache_storage_bytes
+
+    blocks = {
+        f
+        for m in (driver_queries, driver_queries_ext)
+        for f in vars(m).values()
+        if getattr(f, "fixture_kind", None) == "blocks"
+    }
+    assert len(blocks) >= 18, sorted(f.__name__ for f in blocks)
+    for build in blocks:
+        build(spark, SF_DIR).count()
+    used = session_cache_storage_bytes(spark)
+    assert 0 < used <= fixtures.BLOCKS_CEILING_BYTES, used

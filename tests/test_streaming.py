@@ -617,11 +617,20 @@ def test_streaming_neardup_driver_query_leaves_no_orphan_dirs(spark):
     assert n1 == n2  # replay path: identical result against the base index
     after_runs = set(_g.glob(f"{tmp}/streaming_neardup_run_*"))
     assert after_runs == before_runs, "leaked run dirs"
-    # exactly one standing setup tree for this (session, sf_dir)
-    from algoritmos_etl_spark.driver_queries_ext import _STREAM_NEARDUP_SETUP
+    # exactly one standing setup tree per (session, sf_dir)
+    import os
 
-    keys = [k for k in _STREAM_NEARDUP_SETUP if k[1] == SF_DIR]
-    assert len(keys) == 1
+    from algoritmos_etl_spark import fixtures
+    from algoritmos_etl_spark.driver_queries_ext import _stream_neardup_setup
+
+    name = f"{_stream_neardup_setup.__module__}.{_stream_neardup_setup.__qualname__}"
+    trees = [
+        e[2]
+        for k, e in fixtures._STORE.items()
+        if k[1] == name and k[2] == (SF_DIR,)
+    ]
+    assert len(trees) == 1 and os.path.isdir(trees[0])
+    assert _stream_neardup_setup(spark, SF_DIR) == trees[0]
 
 
 def test_streaming_cdc_merge_tombstones_survive_out_of_order_batches(
