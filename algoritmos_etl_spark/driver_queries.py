@@ -25,9 +25,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # session_cache_storage_bytes is re-exported: perfbench imports it from here
-from .fixtures import fixture, session_cache_storage_bytes  # noqa: F401
+from .fixtures import session_cache_storage_bytes  # noqa: F401
 from .functions.scalars import fixed6, one_partition
-from .sources.readers import ORACLE_BARS_CTE, daily_bars, load_table
+from .sources.readers import ORACLE_BARS_CTE, _bars, load_table
 from .operators import cleaning, patterns, relational, similarity, sorting, technical, volatility
 
 SQRT252 = math.sqrt(252.0)
@@ -49,14 +49,6 @@ def register(name: str, oracle: str | None, doc: str = ""):
         return fn
 
     return deco
-
-
-# The canonical bars model feeds ~20 registry queries: the events→bars
-# aggregation is materialized once per session and every query starts
-# from its blocks (see fixtures.py).
-@fixture("blocks")
-def _bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return daily_bars(load_table(spark, sf_dir, "events"))
 
 
 def r6(col):
@@ -368,9 +360,10 @@ def q_risk(spark, sf_dir):
     # The profile's branches (volatility, moments, pattern scalars) all
     # derive from ONE lag/row_number pass over bars: composing the
     # library builders (analyze_portfolio_risk + series_stats +
-    # streak_stats + gap_stats) costs ~6 full window passes over the
-    # row grain — measured 41 s vs 11 s for this shared-flags plan on
-    # the 30× corpus. The flags relation is checkpointed once; the two
+    # streak_stats + gap_stats, before the last two shared one pass)
+    # cost ~6 full window passes over the row grain — measured 41 s vs
+    # 11 s for this shared-flags plan on the 30× corpus. The flags
+    # relation is checkpointed once; the two
     # remaining window passes run over its narrow filtered subsets, and
     # every aggregate (vol, moments, up/gap totals) fuses into one
     # groupBy. Library single-op builders stay the public API; tests

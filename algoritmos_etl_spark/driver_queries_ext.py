@@ -15,14 +15,13 @@ from pyspark.sql import functions as F
 
 from .driver_queries import (
     DTW_PAIRS_ORACLE,
-    _bars,
     dtw_pairs_distances,
     register,
     r6,
 )
 from .fixtures import fixture
 from .operators import cleaning, dedup, relational, text, vectors
-from .sources.readers import ORACLE_BARS_CTE, load_table
+from .sources.readers import ORACLE_BARS_CTE, _bars, load_table
 
 # DuckDB fragments mirroring text.words_col / normalized_text / token_hash
 _W = "list_filter(string_split(trim(text), ' '), x -> x <> '')"

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
 from ..fixtures import fixture
 from .text import normalized_text, words_col
@@ -473,6 +474,36 @@ def exact_dedup_incremental(spark, new_docs: DataFrame, path: str) -> DataFrame:
     )
 
 
+# The minhash index layout, one schema per dataset under the index
+# root: both writers (minhash_write_index, the streaming appender) land
+# rows cast to it and minhash_lsh_incremental reads with it, so writer
+# and reader cannot drift apart. `batch_id` (and the bands' `band`) are
+# directory partitions: discovered on read, never written as columns.
+MINHASH_INDEX_SCHEMAS = {
+    "bands": StructType([
+        StructField("doc_id", LongType()),
+        StructField("band_sig", StringType()),
+        StructField("batch_id", IntegerType()),
+        StructField("band", IntegerType()),
+    ]),
+    "shingles": StructType([
+        StructField("doc_id", LongType()),
+        StructField("shingle", StringType()),
+        StructField("batch_id", IntegerType()),
+    ]),
+}
+
+
+def minhash_index_rows(df: DataFrame, dataset: str) -> DataFrame:
+    """`df` cast to the columns an index writer lands under
+    `<index>/<dataset>/batch_id=N` (the directory carries batch_id)."""
+    return df.select(*[
+        F.col(f.name).cast(f.dataType)
+        for f in MINHASH_INDEX_SCHEMAS[dataset]
+        if f.name != "batch_id"
+    ])
+
+
 def minhash_write_index(docs: DataFrame, path: str, k_shingle: int = 3) -> None:
     """Materialize the LSH dedup index at ingest — the incremental-
     corpus shape: a 100 TB pipeline dedups each day's increment against
@@ -497,10 +528,12 @@ def minhash_write_index(docs: DataFrame, path: str, k_shingle: int = 3) -> None:
     bands = minhash_bands(
         _with_base_hash(sh).groupBy("doc_id").agg(*_minhash_aggs())
     )
-    bands.write.mode("overwrite").partitionBy("band").parquet(
-        f"{path}/bands/batch_id=-1"
+    minhash_index_rows(bands, "bands").write.mode("overwrite").partitionBy(
+        "band"
+    ).parquet(f"{path}/bands/batch_id=-1")
+    minhash_index_rows(sh, "shingles").write.mode("overwrite").parquet(
+        f"{path}/shingles/batch_id=-1"
     )
-    sh.write.mode("overwrite").parquet(f"{path}/shingles/batch_id=-1")
 
 
 def minhash_lsh_incremental(
@@ -546,14 +579,13 @@ def minhash_lsh_incremental(
             _with_base_hash(sh_new).groupBy("doc_id").agg(*_minhash_aggs())
         ).localCheckpoint(eager=False)
     bands_new = bands_new.select("doc_id", "band", "band_sig")
-    # explicit schemas on the index reads: the layout is fixed by the
-    # two writers (minhash_write_index, the streaming appender), and
+    # explicit schemas on the index reads (MINHASH_INDEX_SCHEMAS):
     # per-micro-batch schema INFERENCE costs a driver job reading
     # parquet footers on every lookup (r13; measured ~0.1 s per read
     # per batch). Partition columns (batch_id, band) stay discovered.
-    bands_old = spark.read.schema(
-        "doc_id long, band_sig string, batch_id int, band int"
-    ).parquet(f"{path}/bands")
+    bands_old = spark.read.schema(MINHASH_INDEX_SCHEMAS["bands"]).parquet(
+        f"{path}/bands"
+    )
     if max_batch_id_exclusive is not None:
         bands_old = bands_old.filter(
             F.col("batch_id") < max_batch_id_exclusive
@@ -585,9 +617,9 @@ def minhash_lsh_incremental(
         )
         .distinct()
     )
-    sh_old = spark.read.schema(
-        "doc_id long, shingle string, batch_id int"
-    ).parquet(f"{path}/shingles")
+    sh_old = spark.read.schema(MINHASH_INDEX_SCHEMAS["shingles"]).parquet(
+        f"{path}/shingles"
+    )
     if max_batch_id_exclusive is not None:
         sh_old = sh_old.filter(F.col("batch_id") < max_batch_id_exclusive)
     sh_all = sh_old.select("doc_id", "shingle").unionByName(
@@ -1072,11 +1104,17 @@ def exact_repeat_runs(
     """
     if sh is None:
         sh = positional_shingles(docs, k).localCheckpoint(eager=False)
-    return _maximal_diagonal_runs(sh, k, max_occ, "len_words")
+    # positional_shingles' `h` is its md5-prefix hash of the shingle
+    return _maximal_diagonal_runs(sh, k, max_occ, "len_words", hash_col="h")
 
 
 def _maximal_diagonal_runs(
-    sh: DataFrame, k: int, max_occ: int, len_alias: str
+    sh: DataFrame,
+    k: int,
+    max_occ: int,
+    len_alias: str,
+    *,
+    hash_col: str | None = None,
 ) -> DataFrame:
     """Shared ExactSubstr core: coalesce string-verified k-shingle
     matches into maximal runs along alignment diagonals. `sh` is any
@@ -1084,6 +1122,13 @@ def _maximal_diagonal_runs(
     (`positional_shingles`) or token grain
     (`positional_token_shingles`); `len_alias` names the output span
     length in the grain's unit.
+
+    `hash_col` names a column of `sh` that the CALLER guarantees is a
+    deterministic hash of `shingle` (equal strings → equal hashes);
+    the hot-count narrowing then reads it instead of the strings.
+    Without it the narrowing hashes `shingle` itself — a column that
+    merely happens to be called `h` is never trusted, since an
+    unrelated one would make the count-1 narrowing drop true repeats.
 
     Exchange discipline (the 100 TB shape): the only FULL-CORPUS
     shuffle keys on an 8-byte engine-internal `xxhash64` of the
@@ -1105,15 +1150,15 @@ def _maximal_diagonal_runs(
     verification, and the candidate join + self-join reuse one string
     partitioning (a hash collision can therefore never flag a clean
     position; the hash only ever narrows)."""
-    if "h" in sh.columns:
-        # the positional table already carries a 60-bit md5-prefix
-        # hash (the landed parquet artifact): narrowing on it lets the
+    if hash_col is not None:
+        # the positional table already carries a hash of the shingle
+        # (the landed parquet artifact): narrowing on it lets the
         # hot-count scan prune the shingle STRINGS away entirely
         # (parquet ReadSchema = doc_id, pos, h), instead of reading
         # every string to recompute xxhash64 (r13). Any
         # hash-of-the-shingle works here — collisions only ADD
         # candidates; the exact-string recount below verifies.
-        sh = sh.select("doc_id", "pos", "shingle", F.col("h").alias("_h"))
+        sh = sh.select("doc_id", "pos", "shingle", F.col(hash_col).alias("_h"))
     else:
         sh = sh.select(
             "doc_id", "pos", "shingle", F.xxhash64("shingle").alias("_h")

@@ -225,36 +225,74 @@ def windowed_streak_histogram(bars: DataFrame, window_size: int) -> DataFrame:
     )
 
 
-def streak_stats(bars: DataFrame, window_size: int) -> DataFrame:
-    """W5 scalar outputs: max_streak, total_ups, total_windows.
+# Column groups of `pattern_stats` (after `symbol`): the W5 streak
+# scalars and the W6 gap scalars, in their output order.
+STREAK_COLS = ("total_ups", "total_windows", "max_streak")
+GAP_COLS = ("total_gaps", "gap_dates", "max_gaps_in_window")
 
-    `max_streak` (max run seen inside any window) equals
-    min(global max run, window_size) because every run ≤ w fits wholly
-    in some window and longer runs are truncated to w — derivable
-    without the windowed UDF.
+
+def pattern_stats(bars: DataFrame, window_size: int) -> DataFrame:
+    """W5 + W6 scalars per symbol: `symbol`, then STREAK_COLS, then
+    GAP_COLS. One row per symbol with at least two bars.
+
+    One window pass over (symbol, date) and one `groupBy("symbol")`:
+    lag/row_number flag each bar, and two frames on the same spec (no
+    further exchange or sort) carry the run state —
+    - the up-run length ending at a bar is `rn` minus the last non-up
+      `rn` (a running max; bar 1 has no predecessor, so it is never
+      up). `max_streak` (max run seen inside any window) equals
+      min(longest run, window_size) because every run ≤ w fits wholly
+      in some window and longer runs are truncated to w;
+    - the trailing gap count of the window ending at a bar is a
+      bounded-frame sum, kept where a full window of w gap flags exists
+      (rn > w).
     """
-    ups = up_flags(bars)
-    totals = ups.groupBy("symbol").agg(
-        F.sum("up").alias("total_ups"),
-        F.greatest(
-            F.count(F.lit(1)) - F.lit(window_size - 1), F.lit(0)
-        ).alias("total_windows"),
+    w = _series_w()
+    flags = bars.select(
+        "symbol",
+        "date",
+        (F.col("close") > F.lag("close").over(w)).cast("int").alias("up"),
+        (F.col("open") > F.lag("high").over(w)).cast("int").alias("gap"),
+        F.row_number().over(w).alias("rn"),
     )
-    run_max = (
-        global_streak_histogram(bars)
-        .groupBy("symbol")
-        .agg(F.max("streak_length").alias("max_run"))
-    )
+    not_up_rn = F.when(F.coalesce(F.col("up"), F.lit(0)) != 1, F.col("rn"))
+    seq = flags.select(
+        "*",
+        (
+            F.col("rn")
+            - F.max(not_up_rn).over(w.rowsBetween(Window.unboundedPreceding, 0))
+        ).cast("long").alias("run"),
+        F.sum("gap").over(w.rowsBetween(-(window_size - 1), 0)).alias("win_gaps"),
+    ).filter(F.col("rn") > 1)
     return (
-        totals.join(run_max, "symbol", "left")
+        seq.groupBy("symbol")
+        .agg(
+            F.sum("up").alias("total_ups"),
+            F.greatest(
+                F.count(F.lit(1)) - F.lit(window_size - 1), F.lit(0)
+            ).alias("total_windows"),
+            F.max("run").alias("max_run"),
+            F.sum("gap").alias("total_gaps"),
+            F.sort_array(
+                F.collect_list(F.when(F.col("gap") == 1, F.col("date")))
+            ).alias("gap_dates"),
+            F.max(
+                F.when(F.col("rn") > window_size, F.col("win_gaps"))
+            ).alias("max_gaps_in_window"),
+        )
         .withColumn(
             "max_streak",
             F.when(F.col("total_windows") == 0, F.lit(0)).otherwise(
                 F.coalesce(F.least(F.col("max_run"), F.lit(window_size)), F.lit(0))
             ),
         )
-        .select("symbol", "total_ups", "total_windows", "max_streak")
+        .select("symbol", *STREAK_COLS, *GAP_COLS)
     )
+
+
+def streak_stats(bars: DataFrame, window_size: int) -> DataFrame:
+    """W5 scalar outputs: max_streak, total_ups, total_windows."""
+    return pattern_stats(bars, window_size).select("symbol", *STREAK_COLS)
 
 
 def gap_up_windows(bars: DataFrame, window_size: int) -> DataFrame:
@@ -272,16 +310,4 @@ def gap_up_windows(bars: DataFrame, window_size: int) -> DataFrame:
 
 def gap_stats(bars: DataFrame, window_size: int) -> DataFrame:
     """W6/A6 scalars: total gaps, gap dates, max gaps in any window."""
-    gaps = gap_flags(bars)
-    totals = gaps.groupBy("symbol").agg(
-        F.sum("gap").alias("total_gaps"),
-        F.sort_array(
-            F.collect_list(F.when(F.col("gap") == 1, F.col("date")))
-        ).alias("gap_dates"),
-    )
-    per_window = (
-        gap_up_windows(bars, window_size)
-        .groupBy("symbol")
-        .agg(F.max("gaps_in_window").alias("max_gaps_in_window"))
-    )
-    return totals.join(per_window, "symbol", "left")
+    return pattern_stats(bars, window_size).select("symbol", *GAP_COLS)

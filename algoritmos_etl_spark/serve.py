@@ -20,6 +20,17 @@ is pure stdlib (`http.server`) so the engine gains no web-framework
 dependency. The engine's real serving story at scale is writing result
 tables to a sink; this module exists to show a reference user where
 each of their endpoints' numbers comes from.
+
+Every route reads the shared `_bars` session fixture
+(`sources.readers`), the same blocks the registry queries start from,
+and the API persists nothing of its own. A private
+`daily_bars(...).cache()` would cost 64 tasks per scan: AQE does not
+re-partition a cached plan, so the cache keeps the pre-coalesce
+shuffle width (max(8·cpus, 64) = 64 partitions on 4 cores), where the
+fixture is checkpointed from the final, coalesced plan. The per-symbol
+routes are one-pass plans on top of it: no join and no
+range-partitioned global sort — their results are bounded, so they
+are ordered inside one partition.
 """
 
 from __future__ import annotations
@@ -31,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators import patterns, sampling, similarity, volatility
-from .sources.readers import daily_bars, load_table
+from .sources.readers import _bars
 
 
 def _rows(df: DataFrame) -> list[dict]:
@@ -44,23 +55,27 @@ def _rows(df: DataFrame) -> list[dict]:
 class JsonApi:
     """Route handlers over one SparkSession + dataset directory.
 
-    Plans are built per call (they are cheap); the bars scan is cached
-    once so repeated routes don't re-read parquet.
+    Plans are built per call (they are cheap) over the session's shared
+    `_bars` fixture, so repeated routes neither re-read parquet nor
+    persist anything of their own.
     """
 
     def __init__(self, spark: SparkSession, sf_dir: str):
         self.spark = spark
         self.sf_dir = sf_dir
-        self.bars = daily_bars(load_table(spark, sf_dir, "events")).cache()
+        self.bars = _bars(spark, sf_dir)
 
     # -- /api/symbols (app.py:156-163)
     def symbols(self) -> dict:
-        rows = self.bars.select("symbol").distinct().orderBy("symbol").collect()
+        rows = (
+            self.bars.select("symbol").distinct()
+            .coalesce(1).sortWithinPartitions("symbol").collect()
+        )
         return {"symbols": [r.symbol for r in rows]}
 
     # -- /api/similarity?a=&b= (app.py:166-319)
     def similarity(self, sym_a: int, sym_b: int) -> dict:
-        known = {r.symbol for r in self.bars.select("symbol").distinct().collect()}
+        known = set(self.symbols()["symbols"])
         if sym_a not in known or sym_b not in known:
             return {"error": "symbol not found"}
         bundle = _rows(similarity.compare_two_assets(self.bars, sym_a, sym_b))[0]
@@ -80,21 +95,26 @@ class JsonApi:
             series, partition_col="symbol", order_cols=["date"],
             max_points=max_points,
         )
-        return {"symbol": symbol, "bars": _rows(thinned.orderBy("date"))}
+        ordered = thinned.coalesce(1).sortWithinPartitions("date")
+        return {"symbol": symbol, "bars": _rows(ordered)}
 
     # -- /api/patterns/<symbol> (app.py:409-444)
     def patterns(self, symbol: int, window_size: int = 5) -> dict:
         one = self.bars.filter(F.col("symbol") == symbol)
-        streaks = _rows(patterns.streak_stats(one, window_size))
-        gaps = _rows(
-            patterns.gap_stats(one, window_size).withColumn(
+        stats = _rows(
+            patterns.pattern_stats(one, window_size).withColumn(
                 "gap_dates", F.col("gap_dates").cast("array<string>")
             )
         )
+        row = stats[0] if stats else {}
+
+        def part(cols):
+            return {k: row[k] for k in ("symbol", *cols) if k in row}
+
         return {
             "symbol": symbol,
-            "streaks": streaks[0] if streaks else {},
-            "gaps": gaps[0] if gaps else {},
+            "streaks": part(patterns.STREAK_COLS),
+            "gaps": part(patterns.GAP_COLS),
         }
 
     # -- /api/risk (app.py:447-486)
@@ -113,10 +133,7 @@ class JsonApi:
         summary = volatility.risk_summary(
             classified.select("symbol", "volatility", "risk_class")
         )
-        streaks = patterns.streak_stats(self.bars, 5)
-        gaps = patterns.gap_stats(self.bars, 5)
-        pats = streaks.join(gaps, "symbol", "left")
-        return classified, summary, pats
+        return classified, summary, patterns.pattern_stats(self.bars, 5)
 
     # -- /export/report — the same document as /export/pdf rendered to
     # standalone HTML (browser-friendly twin)

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..fixtures import fixture
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -91,6 +93,15 @@ def daily_bars(events: DataFrame) -> DataFrame:
             F.count(F.lit(1)).alias("volume"),
         )
     )
+
+
+# The canonical bars model feeds ~20 registry queries and every
+# serve.JsonApi route: the events→bars aggregation is materialized once
+# per (session, sf_dir) and every consumer starts from its blocks (see
+# fixtures.py).
+@fixture("blocks")
+def _bars(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return daily_bars(load_table(spark, sf_dir, "events"))
 
 
 # DuckDB twin of daily_bars(), shared by every oracle query that starts

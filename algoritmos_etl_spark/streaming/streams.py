@@ -316,14 +316,16 @@ def _neardup_batch(
         # write: without it every upstream task opens a writer per band
         # it touches (tasks × 16 tiny files per batch) — the file count
         # later lookups must list and open. After it, one file per band.
-        bands.repartition("band").write.mode("overwrite").partitionBy(
+        _dedup.minhash_index_rows(bands, "bands").repartition(
             "band"
-        ).parquet(f"{index_path}/bands/batch_id={batch_id}")
+        ).write.mode("overwrite").partitionBy("band").parquet(
+            f"{index_path}/bands/batch_id={batch_id}"
+        )
 
     def _w_sh() -> None:
-        sh.write.mode("overwrite").parquet(
-            f"{index_path}/shingles/batch_id={batch_id}"
-        )
+        _dedup.minhash_index_rows(sh, "shingles").write.mode(
+            "overwrite"
+        ).parquet(f"{index_path}/shingles/batch_id={batch_id}")
 
     from concurrent.futures import ThreadPoolExecutor
 

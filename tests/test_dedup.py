@@ -228,6 +228,24 @@ def test_incremental_minhash_matches_full_batch(tables, spark, tmp_path):
     assert inc, "increment produced no pairs — fixture no longer overlaps"
 
 
+def test_minhash_index_written_in_the_shared_schema(spark, tmp_path):
+    """The writer casts to MINHASH_INDEX_SCHEMAS: an increment with
+    int32 doc_ids lands as the long column the readers declare, and the
+    files hold exactly the schema's non-partition columns."""
+    docs = spark.createDataFrame(
+        [(i, f"doc {i} shares a few words with its neighbour {i % 3}")
+         for i in range(12)],
+        "doc_id int, text string",
+    )
+    path = str(tmp_path / "mh_index")
+    dedup.minhash_write_index(docs, path)
+    for dataset, schema in dedup.MINHASH_INDEX_SCHEMAS.items():
+        got = spark.read.parquet(f"{path}/{dataset}").schema
+        assert [(f.name, f.dataType) for f in got] == [
+            (f.name, f.dataType) for f in schema
+        ], dataset
+
+
 def test_incremental_simhash_matches_full_batch(tables, spark, tmp_path):
     """simhash_write_index + simhash_incremental on a 20% increment ≡
     the full-batch pipeline restricted to pairs touching the increment."""
@@ -419,6 +437,27 @@ def test_exact_repeat_runs_synthetic_spans_and_self_repeat(spark):
     # doc 4 shares only the first 8 words with the passage, then XRAY
     r14 = runs[(1, 1, 4, 0)]
     assert r14.len_words == 8 and r14.n_shingles == 1
+
+
+def test_diagonal_runs_trust_only_a_declared_hash_column(spark):
+    """A positional table whose `h` column is NOT a hash of the shingle
+    (here: unique per row, so every hash count is 1) must not narrow
+    the candidates unless the caller declares it via `hash_col`."""
+    shared = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
+    docs = spark.createDataFrame(
+        [(1, f"start {shared} end"), (2, f"other {shared} tail")],
+        "doc_id long, text string",
+    )
+    sh = dedup.positional_shingles(docs, 8)
+    bogus = sh.withColumn("h", F.col("doc_id") * 1000 + F.col("pos"))
+    want = dedup._maximal_diagonal_runs(sh.drop("h"), 8, 64, "len_words")
+    got = dedup._maximal_diagonal_runs(bogus, 8, 64, "len_words")
+    assert want.count() == 1
+    assert sorted(got.collect()) == sorted(want.collect())
+    trusted = dedup._maximal_diagonal_runs(
+        bogus, 8, 64, "len_words", hash_col="h"
+    )
+    assert trusted.count() == 0  # what trusting an unrelated h costs
 
 
 def test_duplicate_passages_string_verified(spark):
